@@ -151,77 +151,22 @@ def cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_materialize_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL Structured Streaming materializer, driver-checkable: the
-    change log is written as file slices, replayed through the
-    applyInPandasWithState LWW fold one file per micro-batch
-    (availableNow), and the per-batch updates are merged into a parquet
-    state snapshot by a foreachBatch sink — so the streaming fold itself
-    hash-matches the same SQL oracle as the batch `cdc_materialize`.
-    Nothing passes through the driver: the former memory-sink bridge is
-    gone; the sink's merge is a distributed keyed aggregate and the final
-    state is read straight off the snapshot (the local stand-in for MERGE
-    INTO a Delta/Iceberg table). Slicing order doesn't matter (LWW keys on
-    seq, asserted exhaustively in tests/test_streaming.py); at production
-    scale the identical query runs unbounded with RocksDB state."""
-    import os
-    from .._scratch import scratch_dir
-
-    from ..streaming.cdc_stream import (
-        CHANGE_SCHEMA,
-        materialize_with_state,
-        state_snapshot_sink,
-    )
-
-    tmp = scratch_dir("cdc_stream_q_")
-    log_dir = os.path.join(tmp, "log")
-    message_changes_df(spark, sf_dir).orderBy("seq").coalesce(4).write.mode(
-        "overwrite"
-    ).parquet(log_dir)
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
-    )
-    q = state_snapshot_sink(
-        materialize_with_state(stream),
-        state_dir=os.path.join(tmp, "state"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-    )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise RuntimeError("streaming materializer did not finish within 300s")
-    if q.exception() is not None:
-        raise q.exception()
-    current = os.path.join(tmp, "state", "current")
-    if not os.path.exists(current):
-        # empty change log: no batch ever touched a bucket, so the sink
-        # never materialized a snapshot — the folded state is empty
-        from ..streaming.cdc_stream import UPDATES_SCHEMA
-
-        return spark.createDataFrame([], UPDATES_SCHEMA).select(
-            "id", "content", "last_seq", "updated_at"
-        )
-    snapshot = spark.read.parquet(current)
-    return snapshot.filter(~F.col("is_deleted")).select(
-        "id", "content", "last_seq", "updated_at"
-    )
-
-
 def cdc_materialize_tx(
     spark: SparkSession, sf_dir: str, backend: str = "manifest"
 ) -> DataFrame:
-    """The streaming materializer through the ATOMIC sink
-    (`streaming/tx_snapshot.py`): same change-log replay and
-    applyInPandasWithState LWW fold as `cdc_materialize_streaming`, but
-    each micro-batch commits via immutable data files + an atomic
-    manifest swap instead of dynamic partition overwrite — the Iceberg
-    commit protocol reduced to its minimum, with batch_id replay-skip
-    and time-travel-able history. Hash-matching the SAME oracle as the
-    batch fold proves the transactional commit path end to end (the
-    crash/replay/GC properties are proven separately in
-    tests/test_streaming.py::test_tx_sink_*)."""
+    """The REAL Structured Streaming materializer, oracle-checked: the
+    change log is written as file slices and replayed through the
+    applyInPandasWithState LWW fold one file per micro-batch
+    (availableNow), and each micro-batch's updates commit through the
+    ATOMIC sink (`streaming/tx_snapshot.py`) — immutable data files + an
+    atomic manifest swap, the Iceberg commit protocol reduced to its
+    minimum, with batch_id replay-skip and time-travel-able history.
+    Nothing is collected on the Spark driver: the sink's merge is a
+    distributed keyed aggregate and the final state is read straight
+    off the committed snapshot. Hash-matching the SAME oracle as the
+    batch fold proves the streaming fold and the transactional commit
+    path end to end (slicing invariance and the crash/replay/GC
+    properties are proven separately in tests/test_streaming.py)."""
     import os
 
     from ..streaming.tx_snapshot import read_tx_snapshot
@@ -232,34 +177,30 @@ def cdc_materialize_tx(
     )
 
 
-def _run_tx_materializer(
-    spark: SparkSession,
-    sf_dir: str,
-    backend: str,
-    tombstone_ttl_seqs: int | None = None,
-) -> str:
-    """Shared harness for the tx-sink entries: slice the change log into
-    micro-batch files, fold it through `tx_snapshot_sink` with the given
-    commit protocol, and return the scratch dir holding ``state``."""
+def _replay_change_log(spark: SparkSession, sf_dir: str, prefix: str, start) -> str:
+    """Shared replay harness for the streaming entries: write the change
+    log as seq-ordered micro-batch files, open it as a file stream that
+    delivers one file per trigger in ascending seq order, run the query
+    ``start(stream, tmp)`` returns to completion, and return the scratch
+    dir ``tmp`` holding the query's outputs."""
     import os
     from .._scratch import scratch_dir
 
-    from ..streaming.cdc_stream import CHANGE_SCHEMA, materialize_with_state
-    from ..streaming.tx_snapshot import tx_snapshot_sink
+    from ..streaming.cdc_stream import CHANGE_SCHEMA
 
-    tmp = scratch_dir("cdc_tx_q_")
+    tmp = scratch_dir(prefix)
     log_dir = os.path.join(tmp, "log")
     message_changes_df(spark, sf_dir).orderBy("seq").coalesce(4).write.mode(
         "overwrite"
     ).parquet(log_dir)
-    # Enforce the in-order micro-batch contract rather than assume it
-    # (round-8 advice): FileStreamSource orders files by MODIFICATION
-    # time, which is parallel-task completion order — a higher-seq slice
-    # finishing first would feed the live-TTL sink out of order. The
-    # global sort's range partitioning makes part-file NAME order the
-    # seq order (coalesce merges consecutive partitions), so stamping
-    # strictly ascending mtimes in name order pins the source's delivery
-    # order to ascending seq.
+    # Enforce the in-order micro-batch contract rather than assume it:
+    # FileStreamSource orders files by MODIFICATION time, which is
+    # parallel-task completion order — a higher-seq slice finishing
+    # first would feed the stream out of order (fatal for the live-TTL
+    # sink). The global sort's range partitioning makes part-file NAME
+    # order the seq order (coalesce merges consecutive partitions), so
+    # stamping strictly ascending mtimes in name order pins the source's
+    # delivery order to ascending seq.
     parts = sorted(f for f in os.listdir(log_dir) if f.startswith("part-"))
     base = max(os.path.getmtime(os.path.join(log_dir, f)) for f in parts)
     for i, f in enumerate(parts):
@@ -270,20 +211,40 @@ def _run_tx_materializer(
         .option("maxFilesPerTrigger", 1)
         .parquet(log_dir)
     )
-    q = tx_snapshot_sink(
-        materialize_with_state(stream),
-        state_dir=os.path.join(tmp, "state"),
-        checkpoint_dir=os.path.join(tmp, "ckpt"),
-        backend=backend,
-        tombstone_ttl_seqs=tombstone_ttl_seqs,
-    )
+    q = start(stream, tmp)
     finished = q.awaitTermination(300)
     if not finished:
         q.stop()
-        raise RuntimeError("tx streaming materializer did not finish within 300s")
+        raise RuntimeError("streaming replay did not finish within 300s")
     if q.exception() is not None:
         raise q.exception()
     return tmp
+
+
+def _run_tx_materializer(
+    spark: SparkSession,
+    sf_dir: str,
+    backend: str,
+    tombstone_ttl_seqs: int | None = None,
+) -> str:
+    """Shared harness for the tx-sink entries: replay the change log
+    through `tx_snapshot_sink` with the given commit protocol, and
+    return the scratch dir holding ``state``."""
+    import os
+
+    from ..streaming.cdc_stream import materialize_with_state
+    from ..streaming.tx_snapshot import tx_snapshot_sink
+
+    def start(stream, tmp):
+        return tx_snapshot_sink(
+            materialize_with_state(stream),
+            state_dir=os.path.join(tmp, "state"),
+            checkpoint_dir=os.path.join(tmp, "ckpt"),
+            backend=backend,
+            tombstone_ttl_seqs=tombstone_ttl_seqs,
+        )
+
+    return _replay_change_log(spark, sf_dir, "cdc_tx_q_", start)
 
 
 def cdc_tombstone_gc(
@@ -361,40 +322,25 @@ def cdc_scd2_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the SAME oracle as the batch window-pass proves a live
     warehouse-history table converges to the batch-derived truth."""
     import os
-    from .._scratch import scratch_dir
 
-    from ..streaming.cdc_stream import CHANGE_SCHEMA, scd2_with_state
+    from ..streaming.cdc_stream import scd2_with_state
 
-    tmp = scratch_dir("cdc_scd2_live_")
-    log_dir = os.path.join(tmp, "log")
-    message_changes_df(spark, sf_dir).orderBy("seq").coalesce(4).write.mode(
-        "overwrite"
-    ).parquet(log_dir)
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
-    )
-    out = os.path.join(tmp, "out")
-    q = (
-        scd2_with_state(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(300)
-    if not finished:
-        q.stop()
-        raise RuntimeError("SCD2 streaming run did not finish within 300s")
-    if q.exception() is not None:
-        raise q.exception()
+    def start(stream, tmp):
+        return (
+            scd2_with_state(stream)
+            .writeStream.format("parquet")
+            .option("path", os.path.join(tmp, "out"))
+            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    tmp = _replay_change_log(spark, sf_dir, "cdc_scd2_live_", start)
     raw = spark.read.schema(
         "id long, content string, valid_from_seq long, valid_to_seq long,"
         " is_current boolean, n_changes long"
-    ).parquet(out)
+    ).parquet(os.path.join(tmp, "out"))
     w = Window.partitionBy("id")
     return (
         raw.withColumn("mx", F.max("n_changes").over(w))
@@ -605,7 +551,6 @@ QUERIES = {
     "cdc_incremental_agg": cdc_incremental_agg,
     "cdc_materialize": cdc_materialize,
     "cdc_log_compact": cdc_log_compact,
-    "cdc_materialize_streaming": cdc_materialize_streaming,
     "cdc_materialize_tx": cdc_materialize_tx,
     "cdc_materialize_tx_delta": cdc_materialize_tx_delta,
     "cdc_tombstone_gc": cdc_tombstone_gc,
@@ -695,7 +640,6 @@ ORACLES = {
         ) v WHERE rn <= 2
     """,
     # the streaming fold must converge to the identical batch state
-    "cdc_materialize_streaming": f"{_CTE} {_FOLD_SQL.format(src='message_changes')}",
     "cdc_materialize_tx": f"{_CTE} {_FOLD_SQL.format(src='message_changes')}",
     "cdc_materialize_tx_delta": f"{_CTE} {_FOLD_SQL.format(src='message_changes')}",
     # the RAW compacted snapshot vs the LIVE fold: equality proves zero

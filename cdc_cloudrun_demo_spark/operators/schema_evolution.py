@@ -169,9 +169,8 @@ def cdc_schema_evolution_live(
     scan fills the column with NULL for v1-era segment files), replays
     both schema generations one file per micro-batch, and a foreachBatch
     sink merges each batch into a bucketed state snapshot by LWW on seq
-    — touched buckets only (dynamic partition overwrite, the
-    state_snapshot_sink discipline: per-batch I/O is O(touched state),
-    never O(total state)); tombstones are RETAINED in state so replays
+    — touched buckets only (dynamic partition overwrite: per-batch I/O
+    is O(touched state), never O(total state)); tombstones are RETAINED in state so replays
     cannot resurrect deletes, and the keyed LWW merge is idempotent so a
     crash mid-commit converges on replay. The final snapshot
     hash-matches the BATCH `cdc_schema_evolution` oracle verbatim: keys

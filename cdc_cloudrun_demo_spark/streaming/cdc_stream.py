@@ -1,20 +1,15 @@
 """Streaming CDC materializer (SURVEY §7 Phase 2 — the hard part).
 
-Two interchangeable implementations of the same fold as operators/cdc.py:
+One streaming path, the same fold as operators/cdc.py:
 
-1. ``materialize_foreach_batch`` — `foreachBatch` + idempotent parquet
-   merge: each micro-batch folds its own events (LWW per key by seq),
-   merges against the current state snapshot, and atomically replaces it.
-   Exactly-once effect: the merge is idempotent (keyed LWW by global seq),
-   so batch replay after failure converges. This is the pattern that maps
-   to MERGE INTO on a transactional table (Delta/Iceberg) on a real
-   cluster — swap `_merge_overwrite` for a MERGE and keep the fold.
-
-2. ``materialize_with_state`` — `applyInPandasWithState` keyed state:
-   per-key LWW state in the state store, update-mode output of changed
-   keys. At scale this is the RocksDB-backed path
-   (`spark.sql.streaming.stateStore.providerClass`), which keeps state on
-   disk rather than heap.
+``materialize_with_state`` — `applyInPandasWithState` keyed state: per-key
+LWW state in the state store, update-mode output of changed keys. At
+scale this is the RocksDB-backed path
+(`spark.sql.streaming.stateStore.providerClass`), which keeps state on
+disk rather than heap. Its updates land in ``tx_snapshot_sink``
+(streaming/tx_snapshot.py), which merges each micro-batch into the
+touched state buckets with ``lww_merge`` and publishes the result as an
+atomic snapshot commit — exactly-once via the recorded ``batch_id``.
 
 Ordering: events are folded by `seq` (the replay-deterministic total
 order, never wall clock), so any micro-batch slicing of the log produces
@@ -24,28 +19,26 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.window import Window
 
 CHANGE_SCHEMA = "seq long, op string, id long, content string, ts timestamp"
-STATE_SCHEMA = "id long, content string, last_seq long, updated_at timestamp"
 # update-mode output of the keyed-state materializer (tombstones flagged)
 UPDATES_SCHEMA = (
     "id long, content string, last_seq long, updated_at timestamp, is_deleted boolean"
 )
 
+N_STATE_BUCKETS = 16
+
 
 def bucket_expr(n_buckets: int):
     """THE bucket function — ``pmod(xxhash64(id), n)`` — defined once so
-    the sinks, both tx store backends, and the DataSource round-trip
+    the sink, both tx store backends, and the DataSource round-trip
     cannot silently diverge on how a key maps to a state bucket."""
     return F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int")
 
@@ -54,159 +47,13 @@ def lww_merge(updates: DataFrame) -> DataFrame:
     """The keyed last-writer-wins fold over (bucket, id): newest
     last_seq wins every column, tombstones RETAINED (is_deleted carries
     forward so replays stay idempotent). One definition shared by the
-    overwrite sink, both tx-snapshot backends, and the Delta round-trip
-    — the merge semantics cannot drift between them."""
+    tx snapshot sink, both of its store backends, and the Delta
+    round-trip — the merge semantics cannot drift between them."""
     return updates.groupBy("bucket", "id").agg(
         F.max_by("content", "last_seq").alias("content"),
         F.max("last_seq").alias("last_seq"),
         F.max_by("updated_at", "last_seq").alias("updated_at"),
         F.max_by("is_deleted", "last_seq").alias("is_deleted"),
-    )
-
-
-def fold_batch(changes: DataFrame) -> DataFrame:
-    """LWW-per-key fold of one slice of the log (same as operators/cdc.py)."""
-    w = Window.partitionBy("id").orderBy(F.desc("seq"))
-    return (
-        changes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "content", F.col("seq").alias("last_seq"),
-                F.col("ts").alias("updated_at"), "op")
-    )
-
-
-def merge_states(current: DataFrame, delta_folded: DataFrame) -> DataFrame:
-    """Merge a folded delta into the current state (keyed LWW by last_seq,
-    tombstones drop). Idempotent: replaying a delta is a no-op."""
-    cur = current.select("id", "content", "last_seq", "updated_at",
-                         F.lit("UPDATE").alias("op"))
-    unioned = cur.unionByName(delta_folded)
-    w = Window.partitionBy("id").orderBy(F.desc("last_seq"))
-    return (
-        unioned.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("op") != "DELETE"))
-        .select("id", "content", "last_seq", "updated_at")
-    )
-
-
-def materialize_foreach_batch(
-    changes_stream: DataFrame, state_dir: str, checkpoint_dir: str,
-):
-    """Start the foreachBatch materializer; returns the StreamingQuery.
-
-    State lives at ``{state_dir}/current`` as parquet; each batch stages a
-    new snapshot then swaps it in via directory rename (atomic on a local
-    FS; on a real deployment this is MERGE INTO a Delta/Iceberg table,
-    same fold). A missing snapshot means "no state yet"; any OTHER read
-    failure (corrupt files, transient FS error) propagates — silently
-    resetting the fold to empty would report success with missing keys."""
-    spark = changes_stream.sparkSession
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        current_path = os.path.join(state_dir, "current")
-        old = os.path.join(state_dir, "old")
-        # Crash recovery for the rename-swap below: if we died between the
-        # two renames, `current` is missing but `old` is intact — restore
-        # it (the checkpoint replays the interrupted batch; the merge is
-        # idempotent). If both exist, `current` is the newer one.
-        if os.path.exists(current_path):
-            shutil.rmtree(old, ignore_errors=True)
-        elif os.path.exists(old):
-            os.rename(old, current_path)
-        folded = fold_batch(batch_df)
-        if os.path.exists(current_path):
-            current = spark.read.parquet(current_path)
-        else:
-            current = spark.createDataFrame([], STATE_SCHEMA)
-        new_state = merge_states(current, folded)
-        # Stage while `current` is still readable, then rename-swap; one
-        # reused staging dir, no per-batch snapshot copies accumulate.
-        stage = os.path.join(state_dir, "stage")
-        shutil.rmtree(stage, ignore_errors=True)
-        new_state.write.mode("overwrite").parquet(stage)
-        if os.path.exists(current_path):
-            os.rename(current_path, old)
-        os.rename(stage, current_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    return (
-        changes_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-N_STATE_BUCKETS = 16
-
-
-def state_snapshot_sink(
-    updates_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = N_STATE_BUCKETS,
-):
-    """foreachBatch sink for the keyed-state materializer: merge each
-    micro-batch's updated keys into a parquet state snapshot (LWW per key
-    by ``last_seq``; tombstone rows are *retained* in the snapshot so a
-    replayed older update can never resurrect a deleted key — readers
-    filter ``is_deleted``). Returns the StreamingQuery.
-
-    The snapshot is hash-partitioned by key bucket
-    (``bucket = pmod(xxhash64(id), n_buckets)``) and each batch rewrites
-    ONLY the buckets its keys touch, via dynamic partition overwrite — the
-    local analog of MERGE INTO's file-level pruning. Per-batch I/O is
-    O(touched state), not O(total state): an untouched bucket's files are
-    left byte-identical (asserted in tests/test_streaming.py). A missing
-    snapshot dir means "no state yet"; any other read error propagates
-    rather than silently resetting the fold to empty. A crash mid-commit
-    can leave a mix of old/new buckets — the checkpoint then replays the
-    batch and the keyed LWW merge is idempotent, so recovery converges.
-    On a real deployment this is MERGE INTO a Delta/Iceberg table —
-    identical fold, transactional commit instead of per-bucket overwrite."""
-    spark = updates_stream.sparkSession
-    current_path = os.path.join(state_dir, "current")
-    bucket_of = bucket_expr(n_buckets)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.withColumn("bucket", bucket_of).persist()
-        try:
-            # ≤ n_buckets ints — bounded metadata, not data
-            touched = [r["bucket"] for r in batch_df.select("bucket").distinct().collect()]
-            if not touched:
-                return
-            if os.path.exists(current_path):
-                # partition pruning: only touched buckets are read
-                cur = spark.read.parquet(current_path).filter(
-                    F.col("bucket").isin(touched)
-                )
-            else:
-                cur = spark.createDataFrame([], UPDATES_SCHEMA).withColumn(
-                    "bucket", F.lit(0).cast("int")
-                )
-            merged = lww_merge(cur.unionByName(batch_df))
-            # Stage (materialize) before overwriting the path being read,
-            # then commit only the touched bucket partitions.
-            stage = os.path.join(state_dir, "stage")
-            shutil.rmtree(stage, ignore_errors=True)
-            merged.write.mode("overwrite").parquet(stage)
-            (
-                spark.read.parquet(stage)
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(current_path)
-            )
-            shutil.rmtree(stage, ignore_errors=True)
-        finally:
-            batch_df.unpersist()
-
-    return (
-        updates_stream.writeStream.foreachBatch(process_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -326,64 +173,6 @@ def scd2_with_state(changes_stream: DataFrame):
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def materialize_transform_with_state(changes_stream: DataFrame):
-    """Same LWW fold on Spark 4's `transformWithStateInPandas` — the
-    successor API to applyInPandasWithState: explicit typed state handles,
-    per-key timers, and first-class RocksDB backing. The processor keeps
-    one ValueState per key; replayed events (seq <= last seen) are
-    idempotently skipped, DELETE leaves a tombstone flag the reader
-    filters. Output mode: update (changed keys per micro-batch).
-
-    Runtime requirements: the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and a working
-    protobuf runtime (the TWS state-server protocol); environments
-    without protobuf should use ``materialize_with_state`` — identical
-    fold semantics on the older API."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        "id long, content string, last_seq long, updated_at timestamp, is_deleted boolean"
-    )
-
-    class LwwProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "lww", "content string, last_seq long, ts_us long, deleted boolean"
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            if self._state.exists():
-                content, last_seq, ts_us, deleted = self._state.get()
-            else:
-                content, last_seq, ts_us, deleted = None, -1, 0, False
-            content, last_seq, ts_us, deleted = _lww_fold_vectorized(
-                rows, content, last_seq, ts_us, deleted
-            )
-            self._state.update((content, last_seq, ts_us, deleted))
-            yield pd.DataFrame(
-                {
-                    "id": [key[0]],
-                    "content": [content],
-                    "last_seq": [last_seq],
-                    "updated_at": [pd.Timestamp(ts_us * 1000)],
-                    "is_deleted": [deleted],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return changes_stream.groupBy("id").transformWithStateInPandas(
-        statefulProcessor=LwwProcessor(),
-        outputStructType=out_schema,
-        outputMode="update",
-        timeMode="None",
     )
 
 

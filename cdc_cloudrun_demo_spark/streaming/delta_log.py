@@ -57,9 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cdc_stream import UPDATES_SCHEMA
+from .cdc_stream import N_STATE_BUCKETS, UPDATES_SCHEMA
 
-N_STATE_BUCKETS = 16
 APP_ID = "cdc-tx-snapshot-sink"  # the txn action's appId (single stream)
 
 _LOG_FMT = "{:020d}.json"

@@ -1,13 +1,12 @@
-"""Transactional snapshot sink: an atomic-commit materializer for the CDC
-fold (the missing piece between `state_snapshot_sink`'s dynamic partition
-overwrite and a real MERGE INTO a Delta/Iceberg table).
+"""Transactional snapshot sink: the atomic-commit materializer for the CDC
+fold — the local, minimum-size form of a MERGE INTO a Delta/Iceberg table.
 
 The reference wraps every mutation in a database transaction
 (`quarkus_cloud_run/src/main/java/com/example/quarkus_cloud_run/MessageResource.java:19,33,45`
-``@Transactional``) — a reader never observes a half-applied request.
-`state_snapshot_sink` approximates that with checkpoint-replay idempotence:
-a crash mid-commit leaves a torn mix of old/new buckets that is only
-REPAIRED on restart. This module closes the gap with the commit protocol
+``@Transactional``) — a reader never observes a half-applied request. A
+sink that overwrites state buckets in place cannot promise that: a crash
+mid-commit leaves a torn mix of old/new buckets that is only repaired on
+restart. This module gives the guarantee with the commit protocol
 transactional table formats use, reduced to its minimum:
 
 * **Immutable data files.** Each batch writes NEW parquet files under
@@ -44,9 +43,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc_stream import UPDATES_SCHEMA, bucket_expr, lww_merge
-
-N_STATE_BUCKETS = 16
+from .cdc_stream import N_STATE_BUCKETS, UPDATES_SCHEMA, bucket_expr, lww_merge
 
 
 def read_manifest_files(
@@ -325,10 +322,11 @@ def tx_snapshot_sink(
     backend: str = "manifest",
     tombstone_ttl_seqs: int | None = None,
 ):
-    """foreachBatch sink with ATOMIC snapshot commits (module docstring).
-    Same fold as `state_snapshot_sink` (keyed LWW by last_seq, tombstones
-    retained); different durability story: a reader sees the previous
-    manifest until the instant the new one renames into place.
+    """foreachBatch sink with ATOMIC snapshot commits (module docstring):
+    each micro-batch's updates are merged into the touched buckets by
+    `lww_merge` (keyed LWW by last_seq, tombstones retained), and a
+    reader sees the previous manifest until the instant the new one is
+    published.
 
     ``on_before_commit(batch_id)`` is a fault-injection seam for the
     crash tests — it runs after the data files are written and before

@@ -211,15 +211,16 @@ def test_keygen_has_no_single_partition_exchange(spark, sf_smoke):
 
 
 def test_streaming_materializer_has_no_memory_sink(spark, sf_smoke):
-    """The streaming materializer's state must live in a parquet snapshot
-    merged by foreachBatch — never a memory sink collected on the driver."""
+    """The streaming materializer's state must live in the atomic
+    snapshot sink's committed files — never a memory sink collected on
+    the Spark driver."""
     import inspect
 
     from cdc_cloudrun_demo_spark.operators import cdc
 
-    src = inspect.getsource(cdc.cdc_materialize_streaming)
+    src = inspect.getsource(cdc._run_tx_materializer)
     assert 'format("memory")' not in src
-    assert "state_snapshot_sink" in src
+    assert "tx_snapshot_sink" in src
 
 
 def test_interval_join_is_hash_not_nested_loop(spark, sf_smoke):

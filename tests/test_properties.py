@@ -11,8 +11,11 @@ from datetime import datetime, timedelta
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from cdc_cloudrun_demo_spark.streaming.cdc_stream import fold_batch, merge_states
+from cdc_cloudrun_demo_spark.operators.cdc import _fold
+from cdc_cloudrun_demo_spark.streaming.cdc_stream import lww_merge
+from tests.test_streaming import _update_rows
 
 CHANGE_SCHEMA = "seq long, op string, id long, content string, ts timestamp"
 
@@ -48,17 +51,16 @@ def _rows(events):
 def test_cdc_fold_matches_model(spark, raw):
     events = [(i + 1, op, key, c) for i, (op, key, c) in enumerate(raw)]
     df = spark.createDataFrame(_rows(events), CHANGE_SCHEMA)
-    folded = fold_batch(df).filter("op <> 'DELETE'")
-    got = {r["id"]: (r["content"], r["last_seq"]) for r in folded.collect()}
-    # fold_batch keeps the latest op per key; the model also drops keys
-    # whose latest op is DELETE — which fold_batch's filter reproduces
+    got = {r["id"]: (r["content"], r["last_seq"]) for r in _fold(df).collect()}
     assert got == _model_fold(events)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_events, _events)
 def test_cdc_merge_is_incremental(spark, raw_a, raw_b):
-    """Folding the whole log at once == folding two slices and merging."""
+    """Folding the whole log at once == folding two slices to update rows
+    and merging them with the sink's `lww_merge` (tombstones retained
+    through the merge, filtered by the reader)."""
     a = [(i + 1, op, key, c) for i, (op, key, c) in enumerate(raw_a)]
     b = [(len(a) + i + 1, op, key, c) for i, (op, key, c) in enumerate(raw_b)]
     df_all = spark.createDataFrame(_rows(a + b), CHANGE_SCHEMA)
@@ -66,14 +68,13 @@ def test_cdc_merge_is_incremental(spark, raw_a, raw_b):
     df_b = spark.createDataFrame(_rows(b), CHANGE_SCHEMA)
 
     whole = {
-        r["id"]: (r["content"], r["last_seq"])
-        for r in fold_batch(df_all).filter("op <> 'DELETE'").collect()
+        r["id"]: (r["content"], r["last_seq"]) for r in _fold(df_all).collect()
     }
-    empty = spark.createDataFrame(
-        [], "id long, content string, last_seq long, updated_at timestamp"
-    )
-    staged = merge_states(merge_states(empty, fold_batch(df_a)), fold_batch(df_b))
-    got = {r["id"]: (r["content"], r["last_seq"]) for r in staged.collect()}
+    merged = lww_merge(_update_rows(df_a).unionByName(_update_rows(df_b)))
+    got = {
+        r["id"]: (r["content"], r["last_seq"])
+        for r in merged.filter(~F.col("is_deleted")).collect()
+    }
     assert got == whole
 
 

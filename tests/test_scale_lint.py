@@ -150,7 +150,7 @@ def test_no_unvetted_driver_collects_in_engine_source():
         "operators/schema_evolution.py": (
             1,
             "<= n_buckets ints: the live evolution sink's touched-bucket "
-            "write set (the state_snapshot_sink discipline)",
+            "write set (dynamic partition overwrite of touched buckets)",
         ),
         "sources/file_formats.py": (
             3,

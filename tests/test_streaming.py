@@ -15,16 +15,19 @@ from cdc_cloudrun_demo_spark.operators.cdc import cdc_materialize
 from cdc_cloudrun_demo_spark.sources import file_stream
 from cdc_cloudrun_demo_spark.streaming.cdc_stream import (
     CHANGE_SCHEMA,
-    fold_batch,
-    materialize_foreach_batch,
-    materialize_transform_with_state,
+    N_STATE_BUCKETS,
+    bucket_expr,
+    lww_merge,
     materialize_with_state,
-    merge_states,
 )
 from cdc_cloudrun_demo_spark.streaming.event_windows import (
     run_to_memory,
     session_aggregates,
     tumbling_counts,
+)
+from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+    read_tx_snapshot,
+    tx_snapshot_sink,
 )
 
 
@@ -50,35 +53,71 @@ def _expected_state(spark, sf_dir: str):
     }
 
 
-def test_foreach_batch_materializer_converges(spark, sf_smoke, tmp_path):
-    log_dir = str(tmp_path / "log")
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    _write_change_log_files(spark, sf_smoke, log_dir, n_slices=4)
+def _await(q, timeout: int = 120) -> None:
+    """Wait for an availableNow query to finish. A timed-out or failed
+    stream fails HERE, instead of being read mid-fold and surfacing as a
+    misleading state diff."""
+    finished = q.awaitTermination(timeout)
+    if not finished:
+        q.stop()
+    assert finished, f"stream did not finish within {timeout}s"
+    if q.exception() is not None:
+        raise q.exception()
 
-    stream = file_stream(
-        spark, os.path.join(log_dir, "slice_*"), CHANGE_SCHEMA, max_files_per_trigger=1
+
+def _tx_materialize(
+    spark, log_glob: str, state_dir: str, ckpt: str, backend: str = "manifest"
+) -> None:
+    """Replay the change-log files under ``log_glob`` (one file per
+    micro-batch) through the streaming CDC path: the keyed-state LWW
+    fold into the atomic snapshot sink."""
+    stream = file_stream(spark, log_glob, CHANGE_SCHEMA, max_files_per_trigger=1)
+    _await(
+        tx_snapshot_sink(
+            materialize_with_state(stream), state_dir, ckpt, backend=backend
+        )
     )
-    q = materialize_foreach_batch(stream, state_dir, ckpt)
-    q.awaitTermination(120)
 
-    got = {
+
+def _tx_state(spark, state_dir: str):
+    return {
         r["id"]: (r["content"], r["last_seq"])
-        for r in spark.read.parquet(os.path.join(state_dir, "current")).collect()
+        for r in read_tx_snapshot(spark, state_dir).collect()
     }
-    assert got == _expected_state(spark, sf_smoke)
+
+
+def _update_rows(changes):
+    """The change log folded to the rows the keyed-state materializer
+    emits (latest event per key, DELETE kept as a tombstone), bucketed
+    as the sink buckets them."""
+    w = Window.partitionBy("id").orderBy(F.desc("seq"))
+    return (
+        changes.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            bucket_expr(N_STATE_BUCKETS).alias("bucket"),
+            "id",
+            "content",
+            F.col("seq").alias("last_seq"),
+            F.col("ts").alias("updated_at"),
+            (F.col("op") == "DELETE").alias("is_deleted"),
+        )
+    )
 
 
 def test_foreach_batch_replay_idempotent(spark, sf_smoke):
-    """Re-merging an already-applied delta must not change state."""
+    """Re-merging already-applied updates must not change state: the
+    sink's `lww_merge` is a fixpoint under replay of the same batch AND
+    of an older one (an older tombstone or update never outvotes a
+    newer row)."""
     changes = message_changes_df(spark, sf_smoke)
-    folded = fold_batch(changes)
-    state1 = merge_states(
-        spark.createDataFrame([], "id long, content string, last_seq long, updated_at timestamp"),
-        folded,
-    )
-    state2 = merge_states(state1, folded)  # replay
-    assert sorted(state1.collect()) == sorted(state2.collect())
+    updates = _update_rows(changes)
+    mid = changes.agg(F.percentile_approx("seq", 0.5)).first()[0]
+    older = _update_rows(changes.filter(F.col("seq") <= mid))
+    state = lww_merge(updates)
+    want = sorted(state.collect())
+    assert sorted(lww_merge(state.unionByName(updates)).collect()) == want
+    assert sorted(lww_merge(state.unionByName(older)).collect()) == want
 
 
 def test_apply_in_pandas_with_state_matches_batch(spark, sf_smoke, tmp_path):
@@ -96,49 +135,6 @@ def test_apply_in_pandas_with_state_matches_batch(spark, sf_smoke, tmp_path):
     # last update per key across all micro-batches == final state
     final = (
         spark.table("cdc_state_updates")
-        .groupBy("id")
-        .agg(F.max_by("content", "last_seq").alias("content"),
-             F.max("last_seq").alias("last_seq"),
-             F.max_by("is_deleted", "last_seq").alias("is_deleted"))
-        .filter(~F.col("is_deleted"))
-    )
-    got = {r["id"]: (r["content"], r["last_seq"]) for r in final.collect()}
-    assert got == _expected_state(spark, sf_smoke)
-
-
-def test_transform_with_state_matches_batch(spark, sf_smoke, tmp_path):
-    """Spark 4 transformWithStateInPandas fold converges to the batch
-    oracle, same as the applyInPandasWithState twin."""
-    # the TWS state-server protocol needs a working protobuf runtime;
-    # without it the Python driver worker crashes at query start
-    pytest.importorskip("google.protobuf.descriptor")
-    log_dir = str(tmp_path / "log_tws")
-    ckpt = str(tmp_path / "ckpt_tws")
-    _write_change_log_files(spark, sf_smoke, log_dir, n_slices=3)
-
-    # transformWithState requires the RocksDB state store (checked at
-    # query start; HDFS-backed provider is rejected)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-    stream = file_stream(
-        spark, os.path.join(log_dir, "slice_*"), CHANGE_SCHEMA, max_files_per_trigger=1
-    )
-    try:
-        updates = materialize_transform_with_state(stream)
-        q = run_to_memory(updates, "cdc_tws_updates", ckpt, output_mode="update")
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    final = (
-        spark.table("cdc_tws_updates")
         .groupBy("id")
         .agg(F.max_by("content", "last_seq").alias("content"),
              F.max("last_seq").alias("last_seq"),
@@ -224,7 +220,9 @@ def test_foreach_batch_restart_from_checkpoint(spark, sf_smoke, tmp_path):
     """Stop the materializer mid-log, deliver more WAL segments, restart
     with the same checkpoint: the fold resumes from the committed offset
     and converges — no duplicates, no lost updates (exactly-once effect
-    via idempotent merge + offset tracking)."""
+    via the sink's batch_id commit + offset tracking)."""
+    import shutil
+
     log_dir = str(tmp_path / "log_restart")
     state_dir = str(tmp_path / "state_restart")
     ckpt = str(tmp_path / "ckpt_restart")
@@ -232,31 +230,18 @@ def test_foreach_batch_restart_from_checkpoint(spark, sf_smoke, tmp_path):
     # phase 1: only the first 3 segments exist in a staged dir
     staged = str(tmp_path / "staged_log")
     os.makedirs(staged)
-    import shutil
-
     names = sorted(os.listdir(log_dir))
     for n in names[:3]:
         shutil.copytree(os.path.join(log_dir, n), os.path.join(staged, n))
-    stream = file_stream(
-        spark, os.path.join(staged, "slice_*"), CHANGE_SCHEMA, max_files_per_trigger=1
-    )
-    q = materialize_foreach_batch(stream, state_dir, ckpt)
-    q.awaitTermination(120)
+    staged_glob = os.path.join(staged, "slice_*")
+    _tx_materialize(spark, staged_glob, state_dir, ckpt)
 
     # phase 2: the rest of the log arrives; restart from the same checkpoint
     for n in names[3:]:
         shutil.copytree(os.path.join(log_dir, n), os.path.join(staged, n))
-    stream2 = file_stream(
-        spark, os.path.join(staged, "slice_*"), CHANGE_SCHEMA, max_files_per_trigger=1
-    )
-    q2 = materialize_foreach_batch(stream2, state_dir, ckpt)
-    q2.awaitTermination(120)
+    _tx_materialize(spark, staged_glob, state_dir, ckpt)
 
-    got = {
-        r["id"]: (r["content"], r["last_seq"])
-        for r in spark.read.parquet(os.path.join(state_dir, "current")).collect()
-    }
-    assert got == _expected_state(spark, sf_smoke)
+    assert _tx_state(spark, state_dir) == _expected_state(spark, sf_smoke)
 
 
 def test_streaming_session_windows_match_batch(spark, sf_smoke, tmp_path):
@@ -296,58 +281,30 @@ def test_streaming_session_windows_match_batch(spark, sf_smoke, tmp_path):
     assert got == want
 
 
-def test_snapshot_sink_rewrites_only_touched_buckets(spark, tmp_path):
-    """The bucketed snapshot sink must do O(touched state) I/O per batch:
-    a micro-batch updating one key rewrites ONLY that key's bucket
-    partition — every other bucket's files stay byte-identical (the local
-    analog of MERGE INTO's file-level pruning)."""
-    import hashlib
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_snapshot_sink_rewrites_only_touched_buckets(spark, tmp_path, backend):
+    """The tx snapshot sink must do O(touched state) I/O per batch: a
+    micro-batch updating one key rewrites ONLY that key's bucket — every
+    other bucket's file list is carried into the next committed version
+    verbatim (the local analog of MERGE INTO's file-level pruning)."""
     from datetime import datetime
 
-    from cdc_cloudrun_demo_spark.streaming.cdc_stream import (
-        materialize_with_state,
-        state_snapshot_sink,
-    )
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import open_store
 
     log_dir = tmp_path / "log"
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
 
     def run_stream():
-        stream = (
-            spark.readStream.schema(CHANGE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(log_dir / "slice_*"))
-        )
-        q = state_snapshot_sink(materialize_with_state(stream), state_dir, ckpt)
-        assert q.awaitTermination(120)
+        _tx_materialize(spark, str(log_dir / "slice_*"), state_dir, ckpt, backend)
 
-    rows1 = [
-        (i + 1, "INSERT", i, f"content-{i}", datetime(2024, 1, 1, 0, 0, i % 60))
-        for i in range(50)
-    ]
-    spark.createDataFrame(rows1, CHANGE_SCHEMA).coalesce(1).write.mode(
+    spark.createDataFrame(_tx_rows_phase1(), CHANGE_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(str(log_dir / "slice_000"))
     run_stream()
-
-    current = os.path.join(state_dir, "current")
-
-    def snapshot_files():
-        out = {}
-        for root, _dirs, files in os.walk(current):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                out[os.path.relpath(p, current)] = hashlib.sha256(
-                    open(p, "rb").read()
-                ).hexdigest()
-        return out
-
-    before = snapshot_files()
-    buckets_before = {p.split("/")[0] for p in before}
-    assert len(buckets_before) > 1, "need >1 bucket for the pruning assertion"
+    store = open_store(state_dir)
+    before = store.latest_manifest()
+    assert len(before["buckets"]) > 1, "need >1 bucket for the pruning assertion"
 
     # phase 2: a single-key update arrives; same checkpoint → one new batch
     rows2 = [(1000, "UPDATE", 0, "updated-0", datetime(2024, 1, 2))]
@@ -355,136 +312,23 @@ def test_snapshot_sink_rewrites_only_touched_buckets(spark, tmp_path):
         "overwrite"
     ).parquet(str(log_dir / "slice_001"))
     run_stream()
+    after = store.latest_manifest()
+    assert after["version"] == before["version"] + 1
 
-    touched_bucket = spark.sql(
-        "SELECT CAST(pmod(xxhash64(CAST(0 AS BIGINT)), 16) AS INT) AS b"
-    ).collect()[0]["b"]
-    after = snapshot_files()
-    for rel, digest in before.items():
-        bucket_dir = rel.split("/")[0]
-        if bucket_dir == f"bucket={touched_bucket}":
-            continue
-        assert rel in after and after[rel] == digest, f"untouched bucket rewritten: {rel}"
-    # the touched bucket's contents did change
-    touched_before = {p: h for p, h in before.items() if p.startswith(f"bucket={touched_bucket}/")}
-    touched_after = {p: h for p, h in after.items() if p.startswith(f"bucket={touched_bucket}/")}
-    assert touched_before != touched_after
+    touched = str(
+        spark.createDataFrame([(0,)], "id long")
+        .select(bucket_expr(N_STATE_BUCKETS))
+        .first()[0]
+    )
+    assert set(after["buckets"]) == set(before["buckets"])
+    for b, files in before["buckets"].items():
+        if b != touched:
+            assert after["buckets"][b] == files, f"untouched bucket {b} rewritten"
+    assert after["buckets"][touched] != before["buckets"][touched]
 
     # and the final state reflects the update
-    final = {
-        r["id"]: r["content"]
-        for r in spark.read.parquet(current).filter(~F.col("is_deleted")).collect()
-    }
+    final = {r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()}
     assert final[0] == "updated-0" and len(final) == 50
-
-
-def test_snapshot_sink_crash_mid_commit_converges(spark, tmp_path):
-    """Kill the bucketed snapshot sink MID-COMMIT and prove recovery.
-
-    The dynamic partition overwrite in `state_snapshot_sink` commits one
-    bucket directory at a time — a crash between buckets leaves the
-    snapshot with a MIX of pre- and post-batch buckets, and the batch
-    unrecorded in the checkpoint. The documented recovery claim
-    (`cdc_stream.py:state_snapshot_sink` docstring): checkpoint replay +
-    keyed-LWW idempotence converge from that torn state. This test forges
-    exactly that torn state — half the touched buckets rolled back to
-    their pre-batch bytes, the checkpoint's commit marker for the batch
-    deleted — restarts the stream, and asserts the snapshot equals the
-    batch oracle fold of the whole log (including tombstone retention)."""
-    import shutil as sh
-    from datetime import datetime
-
-    from cdc_cloudrun_demo_spark.streaming.cdc_stream import (
-        materialize_with_state,
-        state_snapshot_sink,
-    )
-
-    log_dir = tmp_path / "log"
-    state_dir = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    current = os.path.join(state_dir, "current")
-
-    def run_stream():
-        stream = (
-            spark.readStream.schema(CHANGE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(log_dir / "slice_*"))
-        )
-        q = state_snapshot_sink(materialize_with_state(stream), state_dir, ckpt)
-        assert q.awaitTermination(120)
-
-    # phase 1: 50 keys spread over the 16 buckets
-    rows1 = [
-        (i + 1, "INSERT", i, f"content-{i}", datetime(2024, 1, 1, 0, 0, i % 60))
-        for i in range(50)
-    ]
-    spark.createDataFrame(rows1, CHANGE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(log_dir / "slice_000"))
-    run_stream()
-    pre = str(tmp_path / "pre_batch_snapshot")
-    sh.copytree(current, pre)
-
-    # phase 2: updates on keys 0..9 plus a DELETE of key 3 — touches
-    # several distinct buckets in one micro-batch
-    rows2 = [
-        (1000 + i, "DELETE" if i == 3 else "UPDATE", i,
-         None if i == 3 else f"updated-{i}", datetime(2024, 1, 2, 0, 0, i))
-        for i in range(10)
-    ]
-    spark.createDataFrame(rows2, CHANGE_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(log_dir / "slice_001"))
-    run_stream()
-
-    # forge the torn commit: roll back every other touched bucket to its
-    # pre-batch bytes (crash after committing only some bucket dirs) ...
-    touched = sorted(
-        {
-            r["b"]
-            for r in spark.sql(
-                "SELECT CAST(pmod(xxhash64(CAST(v AS BIGINT)), 16) AS INT) AS b "
-                "FROM VALUES (0),(1),(2),(3),(4),(5),(6),(7),(8),(9) AS t(v)"
-            ).collect()
-        }
-    )
-    assert len(touched) > 1, "need >1 touched bucket to tear the commit"
-    for b in touched[:: 2]:
-        bdir = f"bucket={b}"
-        sh.rmtree(os.path.join(current, bdir), ignore_errors=True)
-        if os.path.exists(os.path.join(pre, bdir)):
-            sh.copytree(os.path.join(pre, bdir), os.path.join(current, bdir))
-    # ... and erase the batch's commit marker so the checkpoint replays it
-    commits = os.path.join(ckpt, "commits")
-    last = max(
-        (f for f in os.listdir(commits) if not f.startswith(".")), key=int
-    )
-    os.remove(os.path.join(commits, last))
-    crc = os.path.join(commits, f".{last}.crc")
-    if os.path.exists(crc):  # local-FS checksum shadow of the marker
-        os.remove(crc)
-
-    # sanity: the torn snapshot is genuinely wrong before recovery
-    torn = {
-        r["id"]: r["content"]
-        for r in spark.read.parquet(current).filter(~F.col("is_deleted")).collect()
-    }
-    want = {i: f"updated-{i}" for i in range(10) if i != 3} | {
-        i: f"content-{i}" for i in range(10, 50)
-    }
-    assert torn != want, "rollback failed to tear the snapshot"
-
-    # restart with the same checkpoint: the uncommitted batch replays and
-    # the keyed-LWW merge converges over the mixed old/new buckets
-    run_stream()
-    got = {
-        r["id"]: r["content"]
-        for r in spark.read.parquet(current).filter(~F.col("is_deleted")).collect()
-    }
-    assert got == want
-    # tombstone retained (not resurrected, reader-filtered)
-    dead = spark.read.parquet(current).filter(F.col("is_deleted")).collect()
-    assert [r["id"] for r in dead] == [3]
 
 
 def _tx_rows_phase1():
@@ -516,11 +360,9 @@ def _tx_want_final():
 def test_tx_sink_atomic_visibility_under_crash(spark, tmp_path, backend):
     """The transactional sink's core guarantee: a crash BETWEEN writing
     the new data files and publishing the manifest leaves the reader on
-    the previous snapshot IN FULL — not the torn old/new bucket mix the
-    overwrite sink exhibits (see test_snapshot_sink_crash_mid_commit_
-    converges, where the torn state is observable by design). Restarting
-    replays the batch and commits; gc() then sweeps the orphan
-    generation the crashed attempt left behind.
+    the previous snapshot IN FULL — never a torn mix of old and new
+    buckets. Restarting replays the batch and commits; gc() then sweeps
+    the orphan generation the crashed attempt left behind.
 
     Parametrized over BOTH commit-protocol backends — the bespoke
     manifest pointer and the public Delta Lake transaction log
@@ -751,16 +593,8 @@ def test_slicing_invariance(spark, sf_smoke, tmp_path, n_slices):
     state_dir = str(tmp_path / f"state_{n_slices}")
     ckpt = str(tmp_path / f"ckpt_{n_slices}")
     _write_change_log_files(spark, sf_smoke, log_dir, n_slices=n_slices)
-    stream = file_stream(
-        spark, os.path.join(log_dir, "slice_*"), CHANGE_SCHEMA, max_files_per_trigger=1
-    )
-    q = materialize_foreach_batch(stream, state_dir, ckpt)
-    q.awaitTermination(120)
-    got = {
-        r["id"]: (r["content"], r["last_seq"])
-        for r in spark.read.parquet(os.path.join(state_dir, "current")).collect()
-    }
-    assert got == _expected_state(spark, sf_smoke)
+    _tx_materialize(spark, os.path.join(log_dir, "slice_*"), state_dir, ckpt)
+    assert _tx_state(spark, state_dir) == _expected_state(spark, sf_smoke)
 
 
 def test_streaming_drop_duplicates_matches_batch(spark, sf_smoke, tmp_path):

@@ -28,7 +28,7 @@ print("entry idempotent: OK")
 # 3. queries() at a DIFFERENT sf than the oracle sweep used (sf0.001) —
 #    probes that nothing is hardwired to one directory
 q = em.queries()
-for name in ["cdc_materialize", "cdc_materialize_streaming", "join_star_revenue",
+for name in ["cdc_materialize", "cdc_materialize_tx", "join_star_revenue",
              "stream_session_windows", "dedup_exact", "sim_cosine_topk",
              "multimodal_features"]:
     n = q[name](spark, "/root/testdata/sf0.001").count()
