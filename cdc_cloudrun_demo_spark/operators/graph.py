@@ -561,9 +561,12 @@ def graph_components(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> Da
         .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .localCheckpoint(eager=True)
     )
+    # floor of 2: a 1-partition pin canonicalizes to SinglePartition
+    # (see graph_pagerank)
     with _static_pin_plan(spark):
         sym = sym.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("src")
+            max(int(spark.conf.get("spark.sql.shuffle.partitions")), 2),
+            F.col("src"),
         ).localCheckpoint(eager=False)
     labels = (
         sym.select(F.col("src").alias("node"))
@@ -601,7 +604,6 @@ def graph_components(spark: SparkSession, sf_dir: str, max_iter: int = 20) -> Da
         labels = new_labels
         if changed == 0:
             break
-    sym.unpersist()
     return labels.select(F.col("node").alias("part_id"), "component_id")
 
 
@@ -654,7 +656,7 @@ def graph_bfs_hops(
         # the edge list. Derive content under AQE, then statically
         # re-pin at the relaxation join's partition count.
         edges = edges.localCheckpoint(eager=True)
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_parts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 2)
         with _static_pin_plan(spark):
             edges = edges.repartition(n_parts, F.col("src")).localCheckpoint(
                 eager=False
@@ -756,7 +758,8 @@ def graph_bfs_frontier(
     edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
     with _static_pin_plan(spark):
         edges = edges.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("src")
+            max(int(spark.conf.get("spark.sql.shuffle.partitions")), 2),
+            F.col("src"),
         ).localCheckpoint(eager=False)
     cust = load_table(spark, sf_dir, "customer")
     seeds = (

@@ -4,38 +4,43 @@ the executable analog of the reference's one user-facing surface
 DELETE ``/messages/{id}`` over the ``Message(id, content)`` entity,
 ``Message.java``).
 
-Architecture (Spark-first, not a toy dict):
+Architecture (the served table IS the CDC materializer's snapshot):
 
 - **Writes are change events, not mutations.** Every mutating request
-  appends an (id, content, op, seq) event to an in-memory WAL buffer;
-  the buffer FLUSHES as one parquet micro-batch under
-  ``log_dir/batch=<seq>/`` on the next read (or explicit ``flush()``)
-  — the same micro-batching discipline as the streaming sinks, so a
-  thousand writes cost one Spark job, never one job per request.
-- **Reads run the engine's LWW fold.** The served state is the CDC
-  materialization of the whole change log (latest event per id wins,
-  tombstones drop — `operators/cdc.py`'s discipline), computed once
-  per log version and cached; GET endpoints answer from that cached
-  DataFrame. A server restarted over the same ``log_dir`` recovers
-  the identical state from the durable log (tested).
-- **The hot-path metadata is bounded driver state.** The live-id set
-  and the next generated key (IDENTITY semantics: max id EVER
-  assigned + 1, never reused after a delete —
-  ``Message.java:@GeneratedValue``) live in memory like any serving
-  tier's PK index; the CONTENT state stays in Spark. At 100 TB the
-  id set would move to a state store / bloom probe — the contract
-  documented in docs/SCALE.md; the fold itself is already the
-  distributed path.
+  appends an (id, content, is_deleted, request time) event to an
+  in-memory WAL buffer; the buffer FLUSHES on the next read (or an
+  explicit ``flush()``) — a thousand writes cost one commit, never one
+  Spark job per request.
+- **A flush is one atomic snapshot commit.** The buffer becomes
+  ``UPDATES_SCHEMA`` rows (``last_seq`` = flush number × 1,000,000 +
+  request order) and goes through the SAME touched-bucket merge and
+  commit as the streaming materializer (`tx_snapshot.merge_commit`:
+  `lww_merge` by ``last_seq``, tombstones retained) into a
+  `TxSnapshotStore` under ``log_dir``. Readers see manifest version N
+  or N+1 in full — the reference's ``@Transactional`` visibility.
+- **Reads need no Spark job.** The driver keeps the bounded PK index
+  ``id → bucket``. A point read resolves its bucket's file list in the
+  newest manifest under the mutex, then reads that bucket with pyarrow
+  outside it, cached by the bucket's file-list tuple. A commit carries
+  untouched buckets' file lists verbatim, so a write reloads only the
+  buckets it touched. ``GET /messages`` reads every bucket of ONE
+  manifest, so it never mixes versions.
+- **Recovery is the newest manifest.** A restart over the same
+  ``log_dir`` rebuilds ``id → bucket`` from its live rows, the flush
+  counter from its ``batch_id`` and the next generated key from the
+  max id in it, tombstones included (IDENTITY: max id EVER assigned +
+  1, never reused after a delete — ``Message.java:@GeneratedValue``).
+  That holds because the server never compacts tombstones. At 100 TB
+  the PK index would move to a state store / bloom probe — the
+  contract documented in docs/SCALE.md.
 - **Concurrent reads, single-writer state.** The loop is a
   ``ThreadingHTTPServer`` (the reference's Cloud Run envelope is 80
   concurrent requests per container, ``terraform/cloud_run.tf`` /
   ``README.md:293``): requests overlap at the HTTP layer, while ONE
-  mutex serializes exactly the state transitions (WAL append, flush,
-  fold refresh, PK-index/counter updates). Readers leave the lock
-  BEFORE their Spark action — they collect from an immutable
-  already-pinned fold snapshot, so N concurrent GETs run N concurrent
-  Spark jobs against one state version (pair with fair-scheduler
-  pools, `session.scoped_pool`, for isolation).
+  mutex serializes exactly the state transitions (WAL append, flush +
+  commit, PK-index/counter updates). Readers leave the lock BEFORE
+  their file read: committed data files are immutable, so a resolved
+  file list stays valid however many commits follow.
 
 Endpoint map (reference parity):
 
@@ -45,7 +50,7 @@ Endpoint map (reference parity):
     PUT    /messages/{id}     → update content   (S4; null if absent,
                                                   never creates)
     DELETE /messages/{id}     → deleteById()     (S5, tombstone)
-    GET    /healthz           → liveness + log version (S8)
+    GET    /healthz           → liveness + snapshot version (S8)
     GET    /db-info[/test]    → DatabaseInfoResource.java (S6 count,
                                 S7 first-row, S9 backend identity)
     GET    /metrics[/startup|/memory] → MetricsController.java
@@ -57,20 +62,52 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
+from collections import Counter
+from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-MESSAGE_EVENT_SCHEMA = "id long, content string, op string, seq long"
+from ..streaming.cdc_stream import UPDATES_SCHEMA, bucket_expr
+from ..streaming.tx_snapshot import TxSnapshotStore, merge_commit
+
+# a flush numbers its rows flush_no * SEQ_STRIDE + request order, so the
+# WAL buffer is flushed before it holds SEQ_STRIDE events
+SEQ_STRIDE = 1_000_000
+_READ_COLS = ["id", "content", "is_deleted"]
+
+
+def _read_rows(state_dir: str, files: tuple[str, ...]):
+    """(id, content, is_deleted) of committed data files — a plain
+    pyarrow read, no Spark job."""
+    import pyarrow.parquet as pq
+
+    for f in files:
+        t = pq.ParquetFile(os.path.join(state_dir, f)).read(columns=_READ_COLS)
+        yield from zip(*(t.column(c).to_pylist() for c in _READ_COLS))
+
+
+def _rss_mb() -> float:
+    """This process's CURRENT resident set (VmRSS), in MB."""
+    with open("/proc/self/status") as fh:
+        for line in fh:
+            if line.startswith("VmRSS:"):
+                return int(line.split()[1]) / 1024.0
+    return 0.0
+
+
+def _phys_mem_mb() -> float:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
 
 
 class MessageServer:
     """The serve loop. ``seed`` (optional DataFrame of (id, content))
-    initializes an EMPTY log with insert events — re-seeding an
-    existing log is ignored, so restart recovery is log-authoritative.
-    ``port=0`` binds an ephemeral port (read it back from ``.port``)."""
+    initializes an EMPTY store with insert events — re-seeding an
+    existing store is ignored, so restart recovery is
+    snapshot-authoritative. ``port=0`` binds an ephemeral port (read it
+    back from ``.port``)."""
 
     def __init__(
         self,
@@ -80,59 +117,60 @@ class MessageServer:
         host: str = "127.0.0.1",
         port: int = 0,
     ):
-        import time
-
         t_boot = time.monotonic()
         self.spark = spark
         self.log_dir = log_dir
-        os.makedirs(log_dir, exist_ok=True)
-        self._requests = 0
-        self._flushes = 0
-        # ONE mutex serializes state transitions; readers collect from
-        # immutable fold snapshots OUTSIDE it (module docstring)
+        self._store = TxSnapshotStore(log_dir)
+        # ONE mutex serializes state transitions; readers read immutable
+        # committed files OUTSIDE it (module docstring)
         self._mu = threading.RLock()
+        self._stats_mu = threading.Lock()  # the counters below
+        self._routes: Counter = Counter()
+        self._flushes = self._commits = 0
+        self._commit_ms = 0.0
+        self._hits = self._misses = 0
         self._pending: list[tuple] = []
-        self._state_df: DataFrame | None = None
-        batches = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(log_dir)
-            if d.startswith("batch=")
-        ]
-        self._seq = max(batches) + 1 if batches else 0
-        if self._seq == 0 and seed is not None:
-            for r in seed.select("id", "content").collect():
+        # the PK index: live id -> bucket (None until its first flush)
+        self._live: dict[int, int | None] = {}
+        # bucket -> (file-list tuple, {id: content} of its live rows)
+        self._cache: dict[int, tuple[tuple[str, ...], dict]] = {}
+        m = self._store.latest_manifest()
+        self._set_manifest(m)
+        if m is None:
+            self._flush_no, self._next_id = 0, 1
+            if seed is not None:
                 # the seed is the message table itself — bounded by the
                 # serving contract (the reference serves this table as
                 # one JSON response); see VETTED in tests/test_scale_lint
-                self._pending.append((r["id"], r["content"], "I"))
-        # recover bounded metadata from the durable log: live ids and
-        # the max id EVER assigned (IDENTITY: deletes never free keys)
-        log = self._log_df()
-        w = Window.partitionBy("id").orderBy(F.desc("seq"))
-        rows = (
-            log.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("id", (F.col("op") != "D").alias("live"))
-            .collect()
-        )
-        self._live = {r["id"] for r in rows if r["live"]}
-        ever = log.agg(F.max("id")).first()[0]
-        pend_ids = [i for i, _c, _o in self._pending if i is not None]
-        self._next_id = (
-            max([ever or 0] + pend_ids) + 1 if (ever or pend_ids) else 1
-        )
-        for i, _c, op in self._pending:
-            if op == "I" and i is not None:
-                self._live.add(i)
+                for r in seed.select("id", "content").collect():
+                    self._enqueue(r["id"], r["content"], False)
+                    self._live[r["id"]] = None
+                    self._next_id = max(self._next_id, r["id"] + 1)
+        else:
+            # recover the bounded metadata from the newest manifest: the
+            # PK index, the flush counter and the max id EVER assigned
+            # (IDENTITY: tombstones are never compacted here, so a
+            # deleted max id still counts)
+            self._flush_no = m["batch_id"] + 1
+            ever = 0
+            for b, files in self._files.items():
+                rows = {}
+                for i, c, deleted in _read_rows(log_dir, files):
+                    ever = max(ever, i)
+                    if not deleted:
+                        rows[i] = c
+                        self._live[i] = b
+                self._cache[b] = (files, rows)
+            self._next_id = ever + 1
         server = self
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, *a):  # quiet
                 pass
 
-            def _reply(self, obj, status=200):
-                with server._mu:
-                    server._requests += 1
+            def _reply(self, route, obj, status=200):
+                with server._stats_mu:
+                    server._routes[route] += 1
                 body = json.dumps(obj).encode()
                 self.send_response(status)
                 self.send_header("Content-Type", "application/json")
@@ -158,55 +196,63 @@ class MessageServer:
                 try:
                     super().handle_one_request()
                 except json.JSONDecodeError:
-                    self._reply({"error": "malformed JSON body"}, 400)
+                    self._reply("error", {"error": "malformed JSON body"}, 400)
                 except Exception as e:  # pragma: no cover - defensive
                     try:
-                        self._reply({"error": str(e)[:200]}, 500)
+                        self._reply("error", {"error": str(e)[:200]}, 500)
                     except Exception:
                         pass
 
             def do_GET(self):
+                path = self.path.rstrip("/")
                 if self.path == "/healthz":
                     self._reply(
-                        {"status": "UP", "log_version": server._seq}
+                        "GET /healthz",
+                        {"status": "UP", "log_version": server._version},
                     )
-                elif self.path.rstrip("/") == "/metrics":
-                    self._reply(server.metrics())
-                elif self.path.rstrip("/") == "/metrics/startup":
+                elif path == "/metrics":
+                    self._reply("GET /metrics", server.metrics())
+                elif path == "/metrics/startup":
                     # MetricsController.java:89-100 sub-view
                     m = server.metrics()
                     self._reply(
+                        "GET /metrics/startup",
                         {
                             k: m[k]
                             for k in (
                                 "imageType", "startupTimeMs",
                                 "startupTimeSeconds", "profile",
                             )
-                        }
+                        },
                     )
-                elif self.path.rstrip("/") == "/metrics/memory":
+                elif path == "/metrics/memory":
                     # MetricsController.java:102-118 sub-view
-                    self._reply(server.metrics()["memory"])
-                elif self.path.rstrip("/") == "/db-info":
-                    self._reply(server.db_info())
-                elif self.path.rstrip("/") == "/db-info/test":
-                    self._reply(server.db_test())
-                elif self.path.rstrip("/") == "/messages":
-                    self._reply(server.find_all())
+                    self._reply("GET /metrics/memory", server.metrics()["memory"])
+                elif path == "/db-info":
+                    self._reply("GET /db-info", server.db_info())
+                elif path == "/db-info/test":
+                    self._reply("GET /db-info/test", server.db_test())
+                elif path == "/messages":
+                    self._reply("GET /messages", server.find_all())
                 else:
-                    self._reply(server.find_by_id(self._id()))
+                    self._reply(
+                        "GET /messages/{id}", server.find_by_id(self._id())
+                    )
 
             def do_POST(self):
-                self._reply(server.create(self._body().get("content")))
+                self._reply(
+                    "POST /messages", server.create(self._body().get("content"))
+                )
 
             def do_PUT(self):
                 self._reply(
-                    server.update(self._id(), self._body().get("content"))
+                    "PUT /messages/{id}",
+                    server.update(self._id(), self._body().get("content")),
                 )
 
             def do_DELETE(self):
                 server.delete(self._id())
-                self._reply(None)
+                self._reply("DELETE /messages/{id}", None)
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self._httpd.server_address[1]
@@ -219,101 +265,121 @@ class MessageServer:
         self._startup_ms = int((self._t0_monotonic - t_boot) * 1000)
 
     # -- engine side -------------------------------------------------
-    def _log_df(self) -> DataFrame:
-        dirs = [
-            os.path.join(self.log_dir, d)
-            for d in sorted(os.listdir(self.log_dir))
-            if d.startswith("batch=")
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], MESSAGE_EVENT_SCHEMA)
-        return self.spark.read.schema(MESSAGE_EVENT_SCHEMA).parquet(*dirs)
+    def _set_manifest(self, m: dict | None) -> None:
+        """Adopt a committed manifest. The file-list map is REPLACED,
+        never mutated, so a reader holding the old one keeps a whole
+        version."""
+        self._version = 0 if m is None else m["version"]
+        self._files = {
+            int(b): tuple(fl) for b, fl in (m or {"buckets": {}})["buckets"].items()
+        }
+
+    def _enqueue(self, mid, content, deleted: bool) -> None:
+        if len(self._pending) >= SEQ_STRIDE:
+            self._flush_locked()
+        self._pending.append((mid, content, deleted, datetime.now()))
 
     def flush(self) -> None:
-        """Land the WAL buffer as ONE parquet micro-batch (ordinal
-        within the batch rides the fractional part of seq via row
-        position — LWW needs total order, and a PUT after an INSERT of
-        the same id in one buffer must win). Caller holds or takes
-        the state mutex; an in-flight reader's snapshot stays valid
-        (batch dirs are append-only and unpersist only drops cache)."""
+        """Commit the WAL buffer as ONE atomic snapshot version. Caller
+        holds or takes the state mutex; an in-flight reader's resolved
+        file list stays valid (data files are immutable)."""
         with self._mu:
             self._flush_locked()
 
     def _flush_locked(self) -> None:
         if not self._pending:
             return
-        rows = [
-            (i, c, op, self._seq * 1_000_000 + j)
-            for j, (i, c, op) in enumerate(self._pending)
-        ]
-        (
-            self.spark.createDataFrame(rows, MESSAGE_EVENT_SCHEMA)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(self.log_dir, f"batch={self._seq}"))
-        )
-        self._pending.clear()
-        self._seq += 1
         self._flushes += 1
-        if self._state_df is not None:
-            self._state_df.unpersist()
-        self._state_df = None
+        t0 = time.monotonic()
+        base = self._flush_no * SEQ_STRIDE
+        # request order within the buffer rides last_seq — LWW needs a
+        # total order, and a PUT after a POST of the same id must win
+        batch = self.spark.createDataFrame(
+            [(i, c, base + j, ts, d) for j, (i, c, d, ts) in enumerate(self._pending)],
+            UPDATES_SCHEMA,
+        ).withColumn("bucket", bucket_expr(self._store.n_buckets))
+        # ONE collect gives the touched buckets and the ids' buckets;
+        # bounded by the buffer (< SEQ_STRIDE rows)
+        bucket_of = {
+            r["id"]: r["bucket"] for r in batch.select("id", "bucket").collect()
+        }
+        merge_commit(
+            self._store, self.spark, batch, sorted(set(bucket_of.values())),
+            self._flush_no,
+        )
+        self._set_manifest(self._store.latest_manifest())
+        for i, b in bucket_of.items():
+            if i in self._live:
+                self._live[i] = b
+        self._pending.clear()
+        self._flush_no += 1
+        with self._stats_mu:
+            self._commits += 1
+            self._commit_ms += (time.monotonic() - t0) * 1000.0
 
-    def _state(self) -> DataFrame:
-        """The LWW materialization of the full change log, cached per
-        log version — `cdc_materialize`'s fold serving reads."""
-        with self._mu:
-            return self._state_locked()
-
-    def _state_locked(self) -> DataFrame:
+    def _resolve_locked(self, mid):
+        """(bucket, file list) of a live id in the newest version, after
+        flushing the WAL buffer; None for an absent id."""
         self._flush_locked()
-        if self._state_df is None:
-            log = self._log_df()
-            w = Window.partitionBy("id").orderBy(F.desc("seq"))
-            self._state_df = (
-                log.withColumn("rn", F.row_number().over(w))
-                .filter((F.col("rn") == 1) & (F.col("op") != "D"))
-                .select("id", "content")
-                .persist()
-            )
-        return self._state_df
+        b = self._live.get(mid)
+        return None if b is None else (b, self._files.get(b, ()))
+
+    def _bucket_rows(self, b: int, files: tuple[str, ...]) -> dict:
+        """{id: content} of a bucket's live rows, cached by file list."""
+        hit = self._cache.get(b)
+        if hit is not None and hit[0] == files:
+            with self._stats_mu:
+                self._hits += 1
+            return hit[1]
+        rows = {
+            i: c for i, c, deleted in _read_rows(self.log_dir, files) if not deleted
+        }
+        self._cache[b] = (files, rows)
+        with self._stats_mu:
+            self._misses += 1
+        return rows
+
+    def _read(self, mid, where) -> dict | None:
+        if where is None:
+            return None  # reference returns a null body, status 200
+        rows = self._bucket_rows(*where)
+        return {"id": mid, "content": rows[mid]} if mid in rows else None
 
     # -- repository operations (MessageController.java parity) ------
     def find_all(self) -> list[dict]:
-        st = self._state()  # snapshot pinned under the mutex
-        return [
-            {"id": r["id"], "content": r["content"]}
-            for r in st.orderBy("id").collect()  # collected outside it
-        ]
+        with self._mu:
+            self._flush_locked()
+            files = self._files  # one version, pinned under the mutex
+        rows: dict = {}
+        for b, fl in files.items():  # read outside it
+            rows.update(self._bucket_rows(b, fl))
+        return [{"id": i, "content": rows[i]} for i in sorted(rows)]
 
     def find_by_id(self, mid) -> dict | None:
         with self._mu:
-            if mid is None or mid not in self._live:
-                return None  # reference returns a null body, status 200
-            st = self._state_locked()
-        r = st.filter(F.col("id") == mid).first()
-        return None if r is None else {"id": r["id"], "content": r["content"]}
+            where = self._resolve_locked(mid)
+        return self._read(mid, where)
 
     def create(self, content) -> dict:
         with self._mu:
             mid = self._next_id
             self._next_id += 1
-            self._pending.append((mid, content, "I"))
-            self._live.add(mid)
+            self._enqueue(mid, content, False)
+            self._live[mid] = None
         return {"id": mid, "content": content}
 
     def update(self, mid, content) -> dict | None:
         with self._mu:
             if mid is None or mid not in self._live:
                 return None  # PUT never creates (findById().map)
-            self._pending.append((mid, content, "U"))
+            self._enqueue(mid, content, False)
         return {"id": mid, "content": content}
 
     def delete(self, mid) -> None:
         with self._mu:
             if mid is not None and mid in self._live:
-                self._pending.append((mid, None, "D"))
-                self._live.discard(mid)
+                self._enqueue(mid, None, True)
+                del self._live[mid]
 
     def metrics(self) -> dict:
         """`MetricsController.getMetrics` analog
@@ -321,49 +387,59 @@ class MessageServer:
         the reference's exact formatting discipline (%.3f seconds,
         %.2f MB, %.1f%% usage — the M1 derived-metric shapes), nested
         sub-maps (M2) and an ISO timestamp — computed from THIS serve
-        loop's runtime instead of a JVM MXBean, plus the serving
-        counters a data-engine process actually monitors (log version,
-        request and flush counts)."""
-        import resource
-        import time
-        from datetime import datetime, timezone
+        loop's runtime instead of a JVM MXBean. Memory is this
+        process's current resident set against the machine's physical
+        memory. ``serving`` carries the counters a data-engine process
+        actually monitors: snapshot version, requests by route, flushes,
+        commits and their total latency, and bucket-cache hits/misses."""
+        from datetime import timezone
 
         up_ms = int((time.monotonic() - self._t0_monotonic) * 1000)
-        ru = resource.getrusage(resource.RUSAGE_SELF)
-        used_mb = ru.ru_maxrss / 1024.0  # linux reports KiB
-        budget_mb = 128 * 1024.0  # the local[32] harness's heap budget
+        used_mb = _rss_mb()
+        max_mb = _phys_mem_mb()
+        with self._stats_mu:
+            routes = dict(self._routes)
+            serving = {
+                "logVersion": self._version,
+                "requests": sum(routes.values()),
+                "requestsByRoute": routes,
+                "flushes": self._flushes,
+                "commits": self._commits,
+                "commitMsTotal": round(self._commit_ms, 3),
+                "bucketCacheHits": self._hits,
+                "bucketCacheMisses": self._misses,
+                "liveMessages": len(self._live),
+            }
         return {
             "application": "spark-cdc-engine",
             "profile": "local",
             "imageType": "JVM (Spark driver)",
-            "connectionPool": "parquet-change-log",
+            "connectionPool": "tx-snapshot-store",
             "startupTimeMs": self._startup_ms,
             "startupTimeSeconds": f"{self._startup_ms / 1000.0:.3f}",
             "uptimeMs": up_ms,
             "uptimeSeconds": f"{up_ms / 1000.0:.3f}",
             "memory": {
                 "usedMB": f"{used_mb:.2f}",
-                "maxMB": f"{budget_mb:.2f}",
-                "usagePercent": f"{used_mb * 100.0 / budget_mb:.1f}%",
+                "maxMB": f"{max_mb:.2f}",
+                "usagePercent": f"{used_mb * 100.0 / max_mb:.1f}%",
             },
-            "serving": {
-                "logVersion": self._seq,
-                "requests": self._requests,
-                "flushes": self._flushes,
-                "liveMessages": len(self._live),
-            },
+            "serving": serving,
             "timestamp": datetime.now(timezone.utc).isoformat(),
         }
 
     def db_info(self) -> dict:
         """`DatabaseInfoResource.getDatabaseInfo` analog
         (DatabaseInfoResource.java:24-53): backend identity + record
-        counts, served from the fold (S6)."""
+        counts, from the PK index of the newest commit (S6)."""
+        with self._mu:
+            self._flush_locked()
+            n, version = len(self._live), self._version
         return {
-            "databaseProductName": "spark+parquet-change-log",
+            "databaseProductName": "spark+tx-snapshot-store",
             "connected": True,
-            "recordCounts": {"Message": self._state().count()},
-            "logVersion": self._seq,
+            "recordCounts": {"Message": n},
+            "logVersion": version,
         }
 
     def db_test(self) -> dict:
@@ -371,21 +447,21 @@ class MessageServer:
         (DatabaseInfoResource.java:56-86): count + first sample record
         (S6 + S7). ``firstResult`` here is first-by-PK — deterministic
         where the reference's heap order is incidental."""
-        st = self._state()
-        n = st.count()
+        with self._mu:
+            self._flush_locked()
+            n = len(self._live)
+            first = min(self._live) if n else None
+            where = self._resolve_locked(first)
         out: dict = {"status": "SUCCESS", "messageCount": n}
         if n > 0:
-            r = st.orderBy("id").first()
-            out["sampleMessage"] = {"id": r["id"], "content": r["content"]}
+            out["sampleMessage"] = self._read(first, where)
         return out
 
     def close(self) -> None:
         self._httpd.shutdown()
         self._httpd.server_close()
         self._thread.join(10)
-        if self._state_df is not None:
-            self._state_df.unpersist()
-            self._state_df = None
+        self._cache.clear()
 
 
 def _http_json(url: str, method: str = "GET", body: dict | None = None):
@@ -419,11 +495,13 @@ def serve_message_api(
     (mod del_mod), insert ``n_posts`` new messages (generated keys —
     max seed id + 1.., the IDENTITY discipline), and return the final
     GET /messages as a DataFrame. Every mutation traveled the socket,
-    the WAL buffer, the parquet change log and the LWW fold — the
-    DuckDB oracle computes the same lifecycle in closed form, so the
-    served state hash-matches. Scale shape: requests are O(1) driver
-    work; all content state flows through one micro-batch append + one
-    keyed-window fold per log version (the CDC materializer's plan)."""
+    the WAL buffer, one atomic snapshot commit through the tx sink's
+    LWW merge and the per-bucket snapshot read — the DuckDB oracle
+    computes the same lifecycle in closed form, so the served state
+    hash-matches. Scale shape: requests are O(1) driver work; content
+    state flows through one touched-bucket merge + commit per flush
+    (the streaming materializer's sink), and a read loads only the
+    buckets a commit changed."""
     from .._scratch import scratch_dir
     from ..catalog import load_for_compute
 
@@ -477,7 +555,7 @@ def serve_db_info(
     del_mod, then insert ``n_posts``), and return the endpoint's
     response — (status, message_count, sample_id, sample_content) —
     as a 1-row DataFrame. Count is S6 and the sample is S7, both
-    answered from the LWW fold of the change log the requests wrote;
+    answered from the snapshot commits the requests produced;
     the DuckDB oracle computes the same lifecycle in closed form."""
     from .._scratch import scratch_dir
     from ..catalog import load_for_compute

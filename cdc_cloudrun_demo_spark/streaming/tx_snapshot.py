@@ -313,6 +313,19 @@ def compact_tombstones(store, spark: SparkSession, horizon_seq: int) -> int:
     return n_before - n_after
 
 
+def merge_commit(
+    store, spark: SparkSession, updates: DataFrame, touched: list[int], batch_id: int
+) -> None:
+    """THE touched-bucket merge + commit, shared by `tx_snapshot_sink` and
+    the REST serve loop (serving/rest_api.py): read the store's current
+    rows of the ``touched`` buckets, fold them with ``updates`` (rows of
+    ``UPDATES_SCHEMA`` plus ``bucket``) through `lww_merge` and publish
+    the result as ONE atomic commit recording ``batch_id``. Untouched
+    buckets keep their file lists verbatim (`TxSnapshotStore.commit`)."""
+    cur = store.read(spark).filter(F.col("bucket").isin(touched))
+    store.commit(lww_merge(cur.unionByName(updates)), touched, batch_id)
+
+
 def tx_snapshot_sink(
     updates_stream: DataFrame,
     state_dir: str,
@@ -403,8 +416,6 @@ def tx_snapshot_sink(
             ]  # ≤ n_buckets ints — bounded metadata
             if not touched:
                 return
-            cur = store.read(spark).filter(F.col("bucket").isin(touched))
-            merged = lww_merge(cur.unionByName(batch_df))
             if tombstone_ttl_seqs is not None:
                 # Enforce the watermark CONTRACT before committing, not
                 # just assume it: ttl promises no update arrives more
@@ -436,7 +447,7 @@ def tx_snapshot_sink(
                     )
             if on_before_commit is not None:
                 on_before_commit(batch_id)
-            store.commit(merged, touched, batch_id)
+            merge_commit(store, spark, batch_df, touched, batch_id)
             if tombstone_ttl_seqs is not None:
                 # live retention (docstring): the pre-commit aggregate
                 # advances the seq watermark, then tombstones behind

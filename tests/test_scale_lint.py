@@ -126,7 +126,10 @@ def test_no_unvetted_driver_collects_in_engine_source():
     VETTED = {
         # file -> (max occurrences, bound)
         "plans/__init__.py": (1, "plan-audit tooling, not an operator path"),
-        "streaming/cdc_stream.py": (1, "<= n_buckets ints of touched-bucket ids"),
+        "streaming/cdc_stream.py": (
+            0,
+            "none: touched-bucket discovery lives in the tx sink",
+        ),
         "streaming/tx_snapshot.py": (
             4,
             "<= n_buckets ints of touched-bucket ids (sink merge + "
@@ -184,15 +187,17 @@ def test_no_unvetted_driver_collects_in_engine_source():
             "(executor readers stream their own COPY ranges)",
         ),
         "serving/rest_api.py": (
-            5,
+            4,
             "the REST serve loop: every collect is bounded by the "
             "MESSAGE-TABLE serving contract — the reference's GET "
             "/messages returns the whole table as one JSON response "
-            "(MessageController.java:17-20), so seed/find_all/find_by_id "
-            "serialize exactly that table (PK-index recovery rows "
-            "included); the entry's request script enumerates the same "
-            "PKs client-side, as the reference's own benchmark clients "
-            "do (compare_services.sh)",
+            "(MessageController.java:17-20), so the seed serializes "
+            "exactly that table, and the flush's (id, bucket) collect "
+            "is bounded by the WAL buffer; reads are per-bucket pyarrow "
+            "reads of committed snapshot files (no collect), bounded by "
+            "the same contract; the entry's request script enumerates "
+            "the same PKs client-side, as the reference's own benchmark "
+            "clients do (compare_services.sh)",
         ),
     }
     root = os.path.join(os.path.dirname(__file__), "..", "cdc_cloudrun_demo_spark")

@@ -259,3 +259,206 @@ def test_rest_lww_within_one_buffer(spark, tmp_path):
         assert _req(base, "/messages")[1] == [{"id": 2, "content": "v3"}]
     finally:
         srv.close()
+
+
+def test_metrics_memory_is_current_rss_against_physical_memory(spark, tmp_path):
+    """`memory.usedMB` is the CURRENT resident set, so it can never
+    exceed the process's peak (``VmHWM``, read after it), and `maxMB`
+    is the machine's physical memory, not a fixed budget."""
+    import os
+
+    from cdc_cloudrun_demo_spark.serving import MessageServer
+
+    srv = MessageServer(spark, str(tmp_path / "log"))
+    try:
+        mem = srv.metrics()["memory"]
+        with open("/proc/self/status") as fh:
+            peak_mb = next(
+                int(ln.split()[1]) / 1024.0 for ln in fh if ln.startswith("VmHWM:")
+            )
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**20
+        assert 0 < float(mem["usedMB"]) <= peak_mb + 0.01  # %.2f rounding
+        assert mem["maxMB"] == f"{phys_mb:.2f}"
+        pct = float(mem["usagePercent"].rstrip("%"))
+        assert abs(pct - float(mem["usedMB"]) * 100.0 / phys_mb) <= 0.1
+    finally:
+        srv.close()
+
+
+def test_point_reads_hit_the_bucket_cache(spark, tmp_path):
+    """Point reads on an unchanged table run no flush and load each
+    bucket at most once; a write commits only its touched bucket, so
+    reading the written id reloads exactly that one bucket."""
+    from cdc_cloudrun_demo_spark.serving import MessageServer
+
+    seed = spark.createDataFrame(
+        [(i, f"m{i}") for i in range(1, 65)], "id long, content string"
+    )
+    srv = MessageServer(spark, str(tmp_path / "log"), seed=seed)
+    try:
+        base = f"http://127.0.0.1:{srv.port}"
+        assert _req(base, "/messages/1")[1] == {"id": 1, "content": "m1"}
+        s0 = srv.metrics()["serving"]
+        for n in range(200):
+            i = 1 + (n * 7) % 64
+            assert _req(base, f"/messages/{i}")[1] == {"id": i, "content": f"m{i}"}
+        s1 = srv.metrics()["serving"]
+        assert s1["flushes"] == s0["flushes"] == 1
+        assert s1["commits"] == 1 and s1["commitMsTotal"] > 0
+        assert s1["bucketCacheMisses"] - s0["bucketCacheMisses"] <= 16
+        assert s1["bucketCacheHits"] - s0["bucketCacheHits"] >= 200 - 16
+        routes0, routes1 = s0["requestsByRoute"], s1["requestsByRoute"]
+        assert routes1["GET /messages/{id}"] - routes0["GET /messages/{id}"] == 200
+        assert s1["requests"] == sum(routes1.values())
+
+        _req(base, "/messages/5", "PUT", {"content": "five"})
+        assert _req(base, "/messages/5")[1] == {"id": 5, "content": "five"}
+        s2 = srv.metrics()["serving"]
+        assert s2["flushes"] == s1["flushes"] + 1
+        assert s2["logVersion"] == s1["logVersion"] + 1
+        assert s2["bucketCacheMisses"] == s1["bucketCacheMisses"] + 1
+        assert s2["requestsByRoute"]["PUT /messages/{id}"] == 1
+    finally:
+        srv.close()
+
+
+def test_restart_after_deleting_the_highest_id_keeps_identity(spark, tmp_path):
+    """IDENTITY never reuses a key: after the HIGHEST id is deleted and
+    the server restarts, the next POST still gets max + 1 — the retained
+    tombstone carries the high-water mark through recovery."""
+    from cdc_cloudrun_demo_spark.serving import MessageServer
+
+    log = str(tmp_path / "log")
+    seed = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id long, content string"
+    )
+    srv = MessageServer(spark, log, seed=seed)
+    base = f"http://127.0.0.1:{srv.port}"
+    assert _req(base, "/messages", "POST", {"content": "d"})[1]["id"] == 4
+    _req(base, "/messages/4", "DELETE")
+    assert [r["id"] for r in _req(base, "/messages")[1]] == [1, 2, 3]
+    srv.close()
+
+    srv2 = MessageServer(spark, log)
+    try:
+        base2 = f"http://127.0.0.1:{srv2.port}"
+        assert _req(base2, "/messages/4")[1] is None
+        assert _req(base2, "/messages", "POST", {"content": "e"})[1] == {
+            "id": 5,
+            "content": "e",
+        }
+        assert _req(base2, "/db-info/test")[1]["messageCount"] == 4
+    finally:
+        srv2.close()
+
+
+def test_concurrent_readers_never_see_a_mix_of_versions(spark, tmp_path):
+    """Each flush is one atomic snapshot commit: while a writer commits
+    rounds that rewrite EVERY id (a whole round enqueued under the
+    server mutex, so one flush carries exactly one round), concurrent
+    readers over HTTP must see each GET /messages from a single round —
+    never buckets from two versions — and, per reader, never an older
+    round after a newer one (point reads included)."""
+    import sys
+    import threading
+
+    from cdc_cloudrun_demo_spark.serving import MessageServer
+
+    ids = list(range(1, 33))
+    seed = spark.createDataFrame(
+        [(i, "r0") for i in ids], "id long, content string"
+    )
+    srv = MessageServer(spark, str(tmp_path / "log"), seed=seed)
+    base = f"http://127.0.0.1:{srv.port}"
+    errors: list = []
+    done = threading.Event()
+    n_rounds = 5
+
+    def writer():
+        try:
+            for rnd in range(1, n_rounds + 1):
+                with srv._mu:
+                    for i in ids:
+                        srv.update(i, f"r{rnd}")
+                srv.flush()
+        except Exception as e:
+            errors.append(e)
+        finally:
+            done.set()
+
+    def reader(k):
+        last = 0
+        try:
+            while not done.is_set():
+                rows = _req(base, "/messages")[1]
+                assert [r["id"] for r in rows] == ids
+                rounds = {r["content"] for r in rows}
+                assert len(rounds) == 1, rounds
+                rnd = int(rounds.pop()[1:])
+                assert rnd >= last
+                last = rnd
+                i = ids[(k * 5 + last) % len(ids)]
+                rnd = int(_req(base, f"/messages/{i}")[1]["content"][1:])
+                assert rnd >= last
+                last = rnd
+        except Exception as e:  # surfaced after join
+            errors.append(e)
+
+    # more readers than cores, and frequent thread switches
+    threads = [threading.Thread(target=writer)] + [
+        threading.Thread(target=reader, args=(k,)) for k in range(6)
+    ]
+    switch = sys.getswitchinterval()
+    try:
+        # the seed lands as its own commit before the rounds start
+        assert _req(base, "/messages")[1] == [{"id": i, "content": "r0"} for i in ids]
+        sys.setswitchinterval(1e-5)
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(180)
+        sys.setswitchinterval(switch)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        rows = _req(base, "/messages")[1]
+        assert rows == [{"id": i, "content": f"r{n_rounds}"} for i in ids]
+        assert srv.metrics()["serving"]["commits"] == n_rounds + 1
+    finally:
+        sys.setswitchinterval(switch)
+        srv.close()
+
+
+def test_find_all_reads_one_version_when_a_commit_lands_mid_read(
+    spark, tmp_path, monkeypatch
+):
+    """The deterministic form of the race above: a commit that rewrites
+    every id lands after GET /messages has read its first bucket. The
+    response must still come from the version it started on, because
+    the whole file list was pinned under the mutex; the next read sees
+    the new version."""
+    from cdc_cloudrun_demo_spark.serving import MessageServer, rest_api
+
+    ids = list(range(1, 33))
+    seed = spark.createDataFrame(
+        [(i, "r0") for i in ids], "id long, content string"
+    )
+    srv = MessageServer(spark, str(tmp_path / "log"), seed=seed)
+    srv.flush()
+    read_rows = rest_api._read_rows
+    fired = []
+
+    def read_rows_then_commit(state_dir, files):
+        if not fired:
+            fired.append(True)
+            for i in ids:
+                srv.update(i, "r1")
+            srv.flush()
+        yield from read_rows(state_dir, files)
+
+    monkeypatch.setattr(rest_api, "_read_rows", read_rows_then_commit)
+    try:
+        assert srv.find_all() == [{"id": i, "content": "r0"} for i in ids]
+        assert fired and srv.metrics()["serving"]["commits"] == 2
+        assert srv.find_all() == [{"id": i, "content": "r1"} for i in ids]
+    finally:
+        srv.close()
