@@ -155,10 +155,11 @@ def cdc_materialize_tx(
     spark: SparkSession, sf_dir: str, backend: str = "manifest"
 ) -> DataFrame:
     """The REAL Structured Streaming materializer, oracle-checked: the
-    change log is written as file slices and replayed through the
-    applyInPandasWithState LWW fold one file per micro-batch
-    (availableNow), and each micro-batch's updates commit through the
-    ATOMIC sink (`streaming/tx_snapshot.py`) — immutable data files + an
+    change log is written as file slices and replayed one file per
+    micro-batch (availableNow) through the LWW fold — a native streaming
+    aggregation over the same LWW aggregate list as the sink's merge
+    (`cdc_stream.lww_aggs`) — and each micro-batch's updates commit
+    through the ATOMIC sink (`streaming/tx_snapshot.py`) — immutable data files + an
     atomic manifest swap, the Iceberg commit protocol reduced to its
     minimum, with batch_id replay-skip and time-travel-able history.
     Nothing is collected on the Spark driver: the sink's merge is a

@@ -8,9 +8,9 @@ Architecture (the served table IS the CDC materializer's snapshot):
 
 - **Writes are change events, not mutations.** Every mutating request
   appends an (id, content, is_deleted, request time) event to an
-  in-memory WAL buffer; the buffer FLUSHES on the next read (or an
-  explicit ``flush()``) — a thousand writes cost one commit, never one
-  Spark job per request.
+  in-memory WAL buffer; the buffer FLUSHES on the next read, an
+  explicit ``flush()`` or a graceful ``close()`` — a thousand writes
+  cost one commit, never one Spark job per request.
 - **A flush is one atomic snapshot commit.** The buffer becomes
   ``UPDATES_SCHEMA`` rows (``last_seq`` = flush number × 1,000,000 +
   request order) and goes through the SAME touched-bucket merge and
@@ -458,9 +458,14 @@ class MessageServer:
         return out
 
     def close(self) -> None:
+        """Stop serving, then commit the WAL buffer: a write answered
+        with 200 survives a graceful close (no-op when nothing is
+        pending)."""
         self._httpd.shutdown()
         self._httpd.server_close()
         self._thread.join(10)
+        with self._mu:
+            self._flush_locked()
         self._cache.clear()
 
 

@@ -1,15 +1,26 @@
 """Streaming CDC materializer (SURVEY §7 Phase 2 — the hard part).
 
-One streaming path, the same fold as operators/cdc.py:
+One streaming path and ONE last-writer-wins (LWW) fold, the same as
+operators/cdc.py:
 
-``materialize_with_state`` — `applyInPandasWithState` keyed state: per-key
-LWW state in the state store, update-mode output of changed keys. At
-scale this is the RocksDB-backed path
-(`spark.sql.streaming.stateStore.providerClass`), which keeps state on
-disk rather than heap. Its updates land in ``tx_snapshot_sink``
-(streaming/tx_snapshot.py), which merges each micro-batch into the
-touched state buckets with ``lww_merge`` and publishes the result as an
-atomic snapshot commit — exactly-once via the recorded ``batch_id``.
+``materialize_with_state`` — a native Structured Streaming aggregation:
+each change event becomes an update row (``last_seq = seq``, DELETE as a
+tombstone) and the rows are grouped by ``id`` with `lww_aggs`, the same
+aggregate list `lww_merge` uses. The per-key state is the aggregation
+buffer, kept in the configured state store (HDFS-backed locally,
+RocksDB at scale via ``spark.sql.streaming.stateStore.providerClass``),
+and update mode emits each touched key's folded row per micro-batch. No
+Python worker runs on this path. Replays and late events are idempotent
+by ``max``: a lower or equal ``seq`` never displaces the folded row.
+The updates land in ``tx_snapshot_sink`` (streaming/tx_snapshot.py),
+which merges each micro-batch into the touched state buckets with
+``lww_merge`` — the same aggregates again — and publishes the result as
+an atomic snapshot commit, exactly-once via the recorded ``batch_id``.
+
+A checkpoint written by the earlier pandas keyed-state form of this
+operator cannot be resumed: its state schema differs. Start such a
+query from a fresh checkpoint; the sink's committed snapshot is
+unaffected.
 
 Ordering: events are folded by `seq` (the replay-deterministic total
 order, never wall clock), so any micro-batch slicing of the log produces
@@ -43,70 +54,25 @@ def bucket_expr(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int")
 
 
-def lww_merge(updates: DataFrame) -> DataFrame:
-    """The keyed last-writer-wins fold over (bucket, id): newest
-    last_seq wins every column, tombstones RETAINED (is_deleted carries
-    forward so replays stay idempotent). One definition shared by the
-    tx snapshot sink, both of its store backends, and the Delta
-    round-trip — the merge semantics cannot drift between them."""
-    return updates.groupBy("bucket", "id").agg(
+def lww_aggs() -> list:
+    """THE last-writer-wins aggregate list over ``UPDATES_SCHEMA``
+    columns: the newest ``last_seq`` wins every column, tombstones
+    retained (``is_deleted`` carries forward, so replays stay
+    idempotent). Shared by the streaming fold (`materialize_with_state`)
+    and the sink merge (`lww_merge`), so the two cannot drift."""
+    return [
         F.max_by("content", "last_seq").alias("content"),
         F.max("last_seq").alias("last_seq"),
         F.max_by("updated_at", "last_seq").alias("updated_at"),
         F.max_by("is_deleted", "last_seq").alias("is_deleted"),
-    )
+    ]
 
 
-def _lww_fold_vectorized(
-    pdf_iter: Iterator[pd.DataFrame],
-    content: str | None,
-    last_seq: int,
-    ts_us: int,
-    deleted: bool,
-) -> tuple[str | None, int, int, bool]:
-    """Vectorized LWW fold: under last-write-wins only the max-seq event
-    newer than the state matters (each event overwrites the whole value),
-    so the fold is a filter + idxmax — no Python per-row loop. Events with
-    seq <= last_seq are replays and are idempotently ignored."""
-    best: pd.Series | None = None
-    for pdf in pdf_iter:
-        fresh = pdf[pdf["seq"] > last_seq]
-        if fresh.empty:
-            continue
-        top = fresh.loc[fresh["seq"].idxmax()]
-        if best is None or top["seq"] > best["seq"]:
-            best = top
-    if best is not None:
-        last_seq = int(best["seq"])
-        ts_us = int(pd.Timestamp(best["ts"]).value // 1000)
-        if best["op"] == "DELETE":
-            deleted, content = True, None
-        else:
-            deleted, content = False, best["content"]
-    return content, last_seq, ts_us, deleted
-
-
-def _lww_state_fn(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-key LWW fold with explicit state (applyInPandasWithState)."""
-    if state.exists:
-        content, last_seq, ts_us, deleted = state.get
-    else:
-        content, last_seq, ts_us, deleted = None, -1, 0, False
-    content, last_seq, ts_us, deleted = _lww_fold_vectorized(
-        pdf_iter, content, last_seq, ts_us, deleted
-    )
-    state.update((content, last_seq, ts_us, deleted))
-    yield pd.DataFrame(
-        {
-            "id": [key[0]],
-            "content": [content],
-            "last_seq": [last_seq],
-            "updated_at": [pd.Timestamp(ts_us * 1000)],
-            "is_deleted": [deleted],
-        }
-    )
+def lww_merge(updates: DataFrame) -> DataFrame:
+    """The keyed LWW fold over (bucket, id). One definition shared by the
+    tx snapshot sink, both of its store backends, and the Delta
+    round-trip — the merge semantics cannot drift between them."""
+    return updates.groupBy("bucket", "id").agg(*lww_aggs())
 
 
 def _scd2_state_fn(
@@ -176,17 +142,20 @@ def scd2_with_state(changes_stream: DataFrame):
     )
 
 
-def materialize_with_state(changes_stream: DataFrame):
-    """Keyed-state materializer: emits the updated row per key per batch
-    (update mode). Filter ``is_deleted`` downstream for the live view."""
-    out_schema = (
-        "id long, content string, last_seq long, updated_at timestamp, is_deleted boolean"
-    )
-    state_schema = "content string, last_seq long, ts_us long, deleted boolean"
-    return changes_stream.groupBy("id").applyInPandasWithState(
-        _lww_state_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def materialize_with_state(changes_stream: DataFrame) -> DataFrame:
+    """Keyed-state materializer: a native streaming aggregation of
+    `lww_aggs` by ``id`` over the events mapped to ``UPDATES_SCHEMA``
+    rows. In update mode it emits each touched key's folded row per
+    batch. Filter ``is_deleted`` downstream for the live view."""
+    deleted = F.col("op") == "DELETE"
+    return (
+        changes_stream.select(
+            "id",
+            F.when(~deleted, F.col("content")).alias("content"),
+            F.col("seq").alias("last_seq"),
+            F.col("ts").alias("updated_at"),
+            deleted.alias("is_deleted"),
+        )
+        .groupBy("id")
+        .agg(*lww_aggs())
     )

@@ -342,9 +342,12 @@ def tx_snapshot_sink(
     published.
 
     ``on_before_commit(batch_id)`` is a fault-injection seam for the
-    crash tests — it runs after the data files are written and before
-    the manifest publish, exactly where a process death would tear a
-    non-transactional sink. Production passes None.
+    crash tests — it runs after the replay skip and the TTL contract
+    check, and BEFORE `merge_commit` reads the touched buckets, merges
+    and writes any data file. A crash between the data-file write and
+    the publish is injected at the publish itself (tests/
+    test_streaming.py::test_tx_sink_torn_publish_*). Production passes
+    None.
 
     ``backend``: ``'manifest'`` (this module's pointer store) or
     ``'delta'`` (the public Delta Lake log protocol,
@@ -375,10 +378,11 @@ def tx_snapshot_sink(
         prev = store.latest_manifest()
         if prev is not None and batch_id <= prev["batch_id"]:
             # Replayed batch already committed: exactly-once skip. The
-            # batch must still be DRAINED — the upstream stateful
-            # operator's per-partition state commits only happen for
-            # partitions that were processed, and Spark validates that
-            # (STATE_STORE_COMMIT_VALIDATION_FAILED on an early return).
+            # batch must still be DRAINED — the upstream native
+            # aggregation's state store commits each partition only when
+            # it is processed, and Spark validates that every partition
+            # committed (STATE_STORE_COMMIT_VALIDATION_FAILED on an early
+            # return).
             batch_df.count()
             return
         if (

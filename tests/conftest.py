@@ -66,7 +66,11 @@ def pytest_runtest_protocol(item, nextitem):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
+    # as many task slots as the machine's CPUs (the tier-1 command exports
+    # SPARK_GRAFT_CPUS; 8 when unset); 8 shuffle partitions either way, so
+    # partition-count assertions keep their meaning
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "8"
+    s = get_spark(app_name="tests", master=f"local[{cpus}]", shuffle_partitions=8)
     yield s
     s.stop()
 

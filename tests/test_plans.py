@@ -223,6 +223,39 @@ def test_streaming_materializer_has_no_memory_sink(spark, sf_smoke):
     assert "tx_snapshot_sink" in src
 
 
+def test_stream_fold_is_a_native_stateful_aggregate(spark, tmp_path, capsys):
+    """The streaming LWW fold runs as Spark's own stateful aggregate: the
+    executed plan of a `materialize_with_state` → `tx_snapshot_sink`
+    query holds a ``StateStoreSave`` and no Python node — a per-key
+    pandas fold (``FlatMapGroupsInPandasWithState``) or any other
+    Python/Arrow evaluation fails here."""
+    from datetime import datetime
+
+    from cdc_cloudrun_demo_spark.streaming.cdc_stream import (
+        CHANGE_SCHEMA,
+        materialize_with_state,
+    )
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import tx_snapshot_sink
+
+    rows = [(i + 1, "INSERT", i, f"c{i}", datetime(2024, 1, 1)) for i in range(5)]
+    log = str(tmp_path / "log")
+    spark.createDataFrame(rows, CHANGE_SCHEMA).coalesce(1).write.parquet(log)
+    stream = spark.readStream.schema(CHANGE_SCHEMA).parquet(log)
+    q = tx_snapshot_sink(
+        materialize_with_state(stream),
+        str(tmp_path / "state"),
+        str(tmp_path / "ckpt"),
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    capsys.readouterr()
+    q.explain()
+    plan = capsys.readouterr().out
+    assert "StateStoreSave" in plan, plan
+    for node in ("FlatMapGroupsInPandasWithState", "Python", "Pandas", "Arrow"):
+        assert node not in plan, plan
+
+
 def test_interval_join_is_hash_not_nested_loop(spark, sf_smoke):
     """The bucketed interval self-join must plan as an equi hash/SMJ join,
     never a nested-loop/cartesian over per-user event pairs."""

@@ -171,6 +171,25 @@ def test_rest_state_recovers_from_durable_log(spark, tmp_path):
         srv2.close()
 
 
+def test_graceful_close_keeps_acknowledged_writes(spark, tmp_path):
+    """A write answered with 200 and never read back survives a graceful
+    ``close()``: the WAL buffer is committed before the server stops."""
+    from cdc_cloudrun_demo_spark.serving import MessageServer
+
+    log = str(tmp_path / "log")
+    srv = MessageServer(spark, log)
+    base = f"http://127.0.0.1:{srv.port}"
+    status, posted = _req(base, "/messages", "POST", {"content": "kept"})
+    assert status == 200
+    srv.close()
+
+    srv2 = MessageServer(spark, log)
+    try:
+        assert srv2.find_all() == [{"id": posted["id"], "content": "kept"}]
+    finally:
+        srv2.close()
+
+
 def test_threaded_serving_under_concurrent_load(spark, tmp_path):
     """The reference's Cloud Run envelope is concurrent requests per
     container; the serve loop must survive overlapping readers and

@@ -120,7 +120,9 @@ def test_foreach_batch_replay_idempotent(spark, sf_smoke):
     assert sorted(lww_merge(state.unionByName(older)).collect()) == want
 
 
-def test_apply_in_pandas_with_state_matches_batch(spark, sf_smoke, tmp_path):
+def test_stream_fold_update_mode_matches_batch(spark, sf_smoke, tmp_path):
+    """The keyed-state fold's update-mode emissions, collected in a memory
+    sink: the newest emission per key is the batch fold's state."""
     log_dir = str(tmp_path / "log2")
     ckpt = str(tmp_path / "ckpt2")
     _write_change_log_files(spark, sf_smoke, log_dir, n_slices=3)
@@ -530,6 +532,158 @@ def test_tx_sink_replay_skips_committed_batch(spark, tmp_path, backend):
         r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()
     }
     assert got == _tx_want_final()
+
+
+def _tx_stream(spark, log_dir, state_dir, ckpt, backend):
+    """Start the streaming CDC path over ``log_dir/slice_*`` (one file
+    per micro-batch) without waiting for it."""
+    stream = (
+        spark.readStream.schema(CHANGE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(log_dir / "slice_*"))
+    )
+    return tx_snapshot_sink(
+        materialize_with_state(stream), state_dir, ckpt, backend=backend
+    )
+
+
+def _write_slice(spark, log_dir, i: int, rows) -> None:
+    spark.createDataFrame(rows, CHANGE_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(str(log_dir / f"slice_{i:03d}"))
+
+
+def _unreferenced_data_files(store) -> set[str]:
+    """Parquet data files under the store that NO committed version
+    references (the log and manifest directories excluded)."""
+    referenced = {
+        f
+        for v in store.versions()
+        for fl in store.manifest(v)["buckets"].values()
+        for f in fl
+    }
+    on_disk = set()
+    for root, dirs, files in os.walk(store.state_dir):
+        dirs[:] = [d for d in dirs if d not in ("_delta_log", "manifests")]
+        on_disk.update(
+            os.path.relpath(os.path.join(root, f), store.state_dir)
+            for f in files
+            if f.endswith(".parquet")
+        )
+    return on_disk - referenced
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_tx_sink_torn_publish_keeps_previous_version(
+    spark, tmp_path, monkeypatch, backend
+):
+    """The orphan-file window itself: the commit's data files are on disk
+    and the publish (`os.link` of the manifest / log entry) fails once.
+    Readers still see the previous version in full, a restart converges
+    to the fold, and no data file outlives the retry plus `gc()` unless a
+    retained version references it (the manifest backend's retry clears
+    and rewrites its generation directory; the Delta backend's orphans
+    carry unique names and are vacuumed by `gc()`)."""
+    from cdc_cloudrun_demo_spark.streaming import delta_log, tx_snapshot
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import open_store
+
+    log_dir = tmp_path / "log"
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    _write_slice(spark, log_dir, 0, _tx_rows_phase1())
+    _await(_tx_stream(spark, log_dir, state_dir, ckpt, backend))
+    phase1 = _tx_state(spark, state_dir)
+    store = open_store(state_dir)
+    v1 = store.latest_manifest()["version"]
+
+    _write_slice(spark, log_dir, 1, _tx_rows_phase2())
+    mod = tx_snapshot if backend == "manifest" else delta_log
+    real_link = os.link
+    seen = {}
+
+    def link_fails_once(src, dst, *a, **kw):
+        if not seen and str(dst).startswith(state_dir):
+            seen["orphans"] = _unreferenced_data_files(store)
+            raise OSError("injected publish failure")
+        return real_link(src, dst, *a, **kw)
+
+    monkeypatch.setattr(mod.os, "link", link_fails_once)
+    q = _tx_stream(spark, log_dir, state_dir, ckpt, backend)
+    with pytest.raises(Exception, match="injected publish failure"):
+        _await(q)
+    assert seen["orphans"], "the publish failed before any data file was written"
+
+    # the torn attempt is invisible: version and content are phase 1's
+    assert store.latest_manifest()["version"] == v1
+    assert _tx_state(spark, state_dir) == phase1
+    orphans = _unreferenced_data_files(store)
+    assert orphans == seen["orphans"]
+
+    # restart: the checkpoint replays the batch and the commit publishes
+    _await(_tx_stream(spark, log_dir, state_dir, ckpt, backend))
+    assert store.latest_manifest()["version"] == v1 + 1
+    assert {
+        i: c for i, (c, _seq) in _tx_state(spark, state_dir).items()
+    } == _tx_want_final()
+    store.gc(retain_versions=2)
+    on_disk_after = _unreferenced_data_files(store)
+    assert not on_disk_after, f"unreferenced data survived gc: {on_disk_after}"
+    for f in orphans:
+        assert not os.path.exists(os.path.join(state_dir, f)), f
+    assert {
+        r["id"]: r["content"]
+        for r in read_tx_snapshot(spark, state_dir, version=v1).collect()
+    } == {i: c for i, (c, _s) in phase1.items()}
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_late_and_replayed_events_lose_across_batches(spark, tmp_path, backend):
+    """LWW across micro-batches: the second batch carries a LOWER-seq
+    UPDATE for a key the first batch deleted, and an exact re-delivery of
+    an event the first batch already folded. Neither may change state:
+    the committed rows (tombstones included) equal the one-shot fold of
+    the whole log, so the key stays deleted and the other row stays
+    as it was."""
+    from datetime import datetime
+
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import open_store
+
+    log_dir = tmp_path / "log"
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    first = [
+        (1, "INSERT", 1, "a", datetime(2024, 1, 1, 0, 0, 1)),
+        (2, "INSERT", 2, "b", datetime(2024, 1, 1, 0, 0, 2)),
+        (5, "DELETE", 1, None, datetime(2024, 1, 1, 0, 0, 5)),
+        (6, "UPDATE", 2, "b2", datetime(2024, 1, 1, 0, 0, 6)),
+    ]
+    second = [
+        (3, "UPDATE", 1, "late", datetime(2024, 1, 1, 0, 0, 3)),
+        (6, "UPDATE", 2, "b2", datetime(2024, 1, 1, 0, 0, 6)),
+    ]
+    cols = ["bucket", "id", "content", "last_seq", "updated_at", "is_deleted"]
+
+    def committed():
+        return sorted(open_store(state_dir).read(spark).select(*cols).collect())
+
+    _write_slice(spark, log_dir, 0, first)
+    _await(_tx_stream(spark, log_dir, state_dir, ckpt, backend))
+    after_first = committed()
+    batch0 = open_store(state_dir).latest_manifest()["batch_id"]
+    _write_slice(spark, log_dir, 1, second)
+    _await(_tx_stream(spark, log_dir, state_dir, ckpt, backend))
+    # the second batch ran through the fold and committed
+    assert open_store(state_dir).latest_manifest()["batch_id"] == batch0 + 1
+
+    one_shot = sorted(
+        _update_rows(spark.createDataFrame(first + second, CHANGE_SCHEMA))
+        .select(*cols)
+        .collect()
+    )
+    assert committed() == one_shot == after_first
+    rows = {r["id"]: r for r in one_shot}
+    assert rows[1]["is_deleted"] and rows[1]["content"] is None
+    assert (rows[2]["content"], rows[2]["last_seq"]) == ("b2", 6)
 
 
 def test_rate_source_cdc_replay_matches_closed_form(spark, tmp_path):
