@@ -13,24 +13,29 @@ Architecture (the served table IS the CDC materializer's snapshot):
   cost one commit, never one Spark job per request.
 - **A flush is one atomic snapshot commit.** The buffer becomes
   ``UPDATES_SCHEMA`` rows (``last_seq`` = flush number × 1,000,000 +
-  request order) and goes through the SAME touched-bucket merge and
-  commit as the streaming materializer (`tx_snapshot.merge_commit`:
-  `lww_merge` by ``last_seq``, tombstones retained) into a
-  `TxSnapshotStore` under ``log_dir``. Readers see manifest version N
-  or N+1 in full — the reference's ``@Transactional`` visibility.
+  request order) and goes through the SAME commit as the streaming
+  materializer (`tx_snapshot.merge_commit`) into a `TxSnapshotStore`
+  under ``log_dir``: the rows are APPENDED as one delta file per
+  touched bucket, without reading current state, and a bucket listing
+  more than ``MAX_BUCKET_FILES`` files is compacted into one base
+  file. Readers see manifest version N or N+1 in full — the
+  reference's ``@Transactional`` visibility.
 - **Reads need no Spark job.** The driver keeps the bounded PK index
   ``id → bucket``. A point read resolves its bucket's file list in the
-  newest manifest under the mutex, then reads that bucket with pyarrow
-  outside it, cached by the bucket's file-list tuple. A commit carries
-  untouched buckets' file lists verbatim, so a write reloads only the
-  buckets it touched. ``GET /messages`` reads every bucket of ONE
-  manifest, so it never mixes versions.
+  newest manifest under the mutex, then reads that bucket's base +
+  delta files with pyarrow outside it, keeping the newest ``last_seq``
+  per id (the fold `lww_merge` gives Spark readers), cached by the
+  bucket's file-list tuple. A commit carries untouched buckets' file
+  lists verbatim, so a write reloads only the buckets it touched.
+  ``GET /messages`` reads every bucket of ONE manifest, so it never
+  mixes versions.
 - **Recovery is the newest manifest.** A restart over the same
   ``log_dir`` rebuilds ``id → bucket`` from its live rows, the flush
   counter from its ``batch_id`` and the next generated key from the
   max id in it, tombstones included (IDENTITY: max id EVER assigned +
   1, never reused after a delete — ``Message.java:@GeneratedValue``).
-  That holds because the server never compacts tombstones. At 100 TB
+  That holds because the server never drops tombstones: its
+  compactions fold a bucket's files and keep them. At 100 TB
   the PK index would move to a state store / bloom probe — the
   contract documented in docs/SCALE.md.
 - **Concurrent reads, single-writer state.** The loop is a
@@ -76,17 +81,24 @@ from ..streaming.tx_snapshot import TxSnapshotStore, merge_commit
 # a flush numbers its rows flush_no * SEQ_STRIDE + request order, so the
 # WAL buffer is flushed before it holds SEQ_STRIDE events
 SEQ_STRIDE = 1_000_000
-_READ_COLS = ["id", "content", "is_deleted"]
+_READ_COLS = ["id", "content", "last_seq", "is_deleted"]
 
 
 def _read_rows(state_dir: str, files: tuple[str, ...]):
-    """(id, content, is_deleted) of committed data files — a plain
+    """(id, content, is_deleted) of a bucket's committed base + delta
+    files, one row per id: the newest ``last_seq`` wins, the later file
+    on a tie (the readers' `lww_merge`, tombstones kept) — a plain
     pyarrow read, no Spark job."""
     import pyarrow.parquet as pq
 
+    newest: dict = {}
     for f in files:
         t = pq.ParquetFile(os.path.join(state_dir, f)).read(columns=_READ_COLS)
-        yield from zip(*(t.column(c).to_pylist() for c in _READ_COLS))
+        for i, c, seq, d in zip(*(t.column(k).to_pylist() for k in _READ_COLS)):
+            if i not in newest or seq >= newest[i][1]:
+                newest[i] = (c, seq, d)
+    for i, (c, _seq, d) in newest.items():
+        yield i, c, d
 
 
 def _rss_mb() -> float:
@@ -298,15 +310,12 @@ class MessageServer:
             [(i, c, base + j, ts, d) for j, (i, c, d, ts) in enumerate(self._pending)],
             UPDATES_SCHEMA,
         ).withColumn("bucket", bucket_expr(self._store.n_buckets))
-        # ONE collect gives the touched buckets and the ids' buckets;
-        # bounded by the buffer (< SEQ_STRIDE rows)
+        # the PK index needs each id's bucket: one collect, bounded by
+        # the buffer (< SEQ_STRIDE rows)
         bucket_of = {
             r["id"]: r["bucket"] for r in batch.select("id", "bucket").collect()
         }
-        merge_commit(
-            self._store, self.spark, batch, sorted(set(bucket_of.values())),
-            self._flush_no,
-        )
+        merge_commit(self._store, self.spark, batch, self._flush_no)
         self._set_manifest(self._store.latest_manifest())
         for i, b in bucket_of.items():
             if i in self._live:
@@ -500,13 +509,13 @@ def serve_message_api(
     (mod del_mod), insert ``n_posts`` new messages (generated keys —
     max seed id + 1.., the IDENTITY discipline), and return the final
     GET /messages as a DataFrame. Every mutation traveled the socket,
-    the WAL buffer, one atomic snapshot commit through the tx sink's
-    LWW merge and the per-bucket snapshot read — the DuckDB oracle
-    computes the same lifecycle in closed form, so the served state
-    hash-matches. Scale shape: requests are O(1) driver work; content
-    state flows through one touched-bucket merge + commit per flush
-    (the streaming materializer's sink), and a read loads only the
-    buckets a commit changed."""
+    the WAL buffer, one atomic append commit through the tx sink's
+    `merge_commit` and the per-bucket LWW-folding snapshot read — the
+    DuckDB oracle computes the same lifecycle in closed form, so the
+    served state hash-matches. Scale shape: requests are O(1) driver
+    work; content state flows through one append commit per flush (the
+    streaming materializer's sink), and a read loads only the buckets a
+    commit changed."""
     from .._scratch import scratch_dir
     from ..catalog import load_for_compute
 

@@ -432,36 +432,24 @@ def source_sqldump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def source_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two commits through the Delta-protocol table store
-    (streaming/delta_log.py — public delta-io PROTOCOL.md log format),
-    then BOTH snapshots read back via log replay and summarized: commit
-    1 seeds every order as (id, status); commit 2 LWW-overwrites the
-    o_orderkey % 7 == 0 keys to content 'X' and tombstones the
-    % 11 == 0 keys, touching only their hash buckets (the untouched
-    buckets' files are carried by add/remove bookkeeping, not
-    rewritten). Hash-matching the closed-form oracle proves the whole
-    add/remove/txn replay chain — v1 must NOT see the updates, v2 must
-    see exactly them. Scale: commits are O(touched buckets); the log
-    fold the driver performs is metadata-only."""
+def _delta_orders_two_commits(spark: SparkSession, sf_dir: str, prefix: str):
+    """A Delta-protocol table under a fresh scratch dir holding two
+    `merge_commit`s: every order as (id, status) at seq 1, then the
+    o_orderkey % 7 == 0 keys overwritten to content 'X' and the % 11 ==
+    0 keys tombstoned at seq 2. The second commit appends delta files to
+    only those keys' buckets; readers fold them with `lww_merge`."""
     from ..streaming.delta_log import DeltaLogStore
-    from ..streaming.tx_snapshot import bucket_expr, lww_merge
+    from ..streaming.tx_snapshot import merge_commit
 
-    state_dir = os.path.join(scratch_dir("delta_rt_"), "table")
-    store = DeltaLogStore(state_dir)
-    bucket_of = bucket_expr(store.n_buckets)
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderkey").alias("id"),
-            F.col("o_orderstatus").alias("content"),
-            F.lit(1).cast("long").alias("last_seq"),
-            F.lit(None).cast("timestamp").alias("updated_at"),
-            F.lit(False).alias("is_deleted"),
-        )
-        .withColumn("bucket", bucket_of)
+    store = DeltaLogStore(os.path.join(scratch_dir(prefix), "table"))
+    base = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("id"),
+        F.col("o_orderstatus").alias("content"),
+        F.lit(1).cast("long").alias("last_seq"),
+        F.lit(None).cast("timestamp").alias("updated_at"),
+        F.lit(False).alias("is_deleted"),
     )
-    store.commit(base, list(range(store.n_buckets)), batch_id=0)
+    merge_commit(store, spark, base, batch_id=0)
     upd = base.filter((F.col("id") % 7 == 0) | (F.col("id") % 11 == 0)).select(
         "id",
         F.when(F.col("id") % 11 == 0, F.col("content"))
@@ -470,14 +458,25 @@ def source_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).cast("long").alias("last_seq"),
         F.col("updated_at"),
         (F.col("id") % 11 == 0).alias("is_deleted"),
-        "bucket",
     )
-    touched = sorted(
-        r["bucket"] for r in upd.select("bucket").distinct().collect()
-    )  # ≤ n_buckets ints — bounded metadata
-    cur = store.read(spark, 1).filter(F.col("bucket").isin(touched))
-    merged = lww_merge(cur.unionByName(upd))
-    store.commit(merged, touched, batch_id=1)
+    merge_commit(store, spark, upd, batch_id=1)
+    return store
+
+
+def source_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two commits through the Delta-protocol table store
+    (streaming/delta_log.py — public delta-io PROTOCOL.md log format),
+    then BOTH snapshots read back via log replay and summarized: commit
+    1 seeds every order as (id, status); commit 2 LWW-overwrites the
+    o_orderkey % 7 == 0 keys to content 'X' and tombstones the
+    % 11 == 0 keys (`_delta_orders_two_commits`: commit 2 only adds
+    delta files, which readers fold). Hash-matching the closed-form
+    oracle proves the whole add/txn replay chain and the fold — v1 must
+    NOT see the updates, v2 must see exactly them. Scale: a commit
+    appends the batch's rows as one delta file per touched bucket and
+    never reads current state; the log fold the driver performs is
+    metadata-only."""
+    store = _delta_orders_two_commits(spark, sf_dir, "delta_rt_")
     out = None
     for v in (1, 2):
         snap = (
@@ -594,39 +593,7 @@ def source_delta_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums; the oracle is the closed form over orders. Scale: each
     version's diff reads only its touched buckets at v and v-1; the
     feed never scans the table."""
-    from ..streaming.delta_log import DeltaLogStore
-    from ..streaming.tx_snapshot import bucket_expr, lww_merge
-
-    state_dir = os.path.join(scratch_dir("delta_cdf_"), "table")
-    store = DeltaLogStore(state_dir)
-    bucket_of = bucket_expr(store.n_buckets)
-    base = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            F.col("o_orderkey").alias("id"),
-            F.col("o_orderstatus").alias("content"),
-            F.lit(1).cast("long").alias("last_seq"),
-            F.lit(None).cast("timestamp").alias("updated_at"),
-            F.lit(False).alias("is_deleted"),
-        )
-        .withColumn("bucket", bucket_of)
-    )
-    store.commit(base, list(range(store.n_buckets)), batch_id=0)
-    upd = base.filter((F.col("id") % 7 == 0) | (F.col("id") % 11 == 0)).select(
-        "id",
-        F.when(F.col("id") % 11 == 0, F.col("content"))
-        .otherwise(F.lit("X"))
-        .alias("content"),
-        F.lit(2).cast("long").alias("last_seq"),
-        F.col("updated_at"),
-        (F.col("id") % 11 == 0).alias("is_deleted"),
-        "bucket",
-    )
-    touched = sorted(
-        r["bucket"] for r in upd.select("bucket").distinct().collect()
-    )  # ≤ n_buckets ints — bounded metadata
-    cur = store.read(spark, 1).filter(F.col("bucket").isin(touched))
-    store.commit(lww_merge(cur.unionByName(upd)), touched, batch_id=1)
+    store = _delta_orders_two_commits(spark, sf_dir, "delta_cdf_")
     store.optimize(spark)
     return (
         store.change_feed(spark, from_version=1)

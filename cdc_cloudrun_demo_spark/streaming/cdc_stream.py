@@ -13,9 +13,9 @@ and update mode emits each touched key's folded row per micro-batch. No
 Python worker runs on this path. Replays and late events are idempotent
 by ``max``: a lower or equal ``seq`` never displaces the folded row.
 The updates land in ``tx_snapshot_sink`` (streaming/tx_snapshot.py),
-which merges each micro-batch into the touched state buckets with
-``lww_merge`` — the same aggregates again — and publishes the result as
-an atomic snapshot commit, exactly-once via the recorded ``batch_id``.
+which appends each micro-batch as per-bucket delta files in one atomic
+snapshot commit, exactly-once via the recorded ``batch_id``; readers
+fold a bucket's files with ``lww_merge`` — the same aggregates again.
 
 A checkpoint written by the earlier pandas keyed-state form of this
 operator cannot be resumed: its state schema differs. Start such a
@@ -70,8 +70,9 @@ def lww_aggs() -> list:
 
 def lww_merge(updates: DataFrame) -> DataFrame:
     """The keyed LWW fold over (bucket, id). One definition shared by the
-    tx snapshot sink, both of its store backends, and the Delta
-    round-trip — the merge semantics cannot drift between them."""
+    snapshot readers of both tx store backends (which fold a bucket's
+    base + delta files with it) and compaction — the merge semantics
+    cannot drift between them."""
     return updates.groupBy("bucket", "id").agg(*lww_aggs())
 
 

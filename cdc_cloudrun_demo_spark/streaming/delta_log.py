@@ -10,9 +10,11 @@ protocol (delta-io/delta PROTOCOL.md), implemented from the spec:
   ``partitionColumns=["bucket"]``, parquet format). Every commit carries
   a ``txn`` action (``appId``/``version``) — Delta's idempotent-writer
   primitive, which maps 1:1 onto the sink's batch_id replay-skip — plus
-  ``remove`` actions for the files a touched bucket replaces and ``add``
-  actions (path, partitionValues, size, modificationTime) for the new
-  files, then ``commitInfo``.
+  ``add`` actions (path, partitionValues, size, modificationTime) for
+  the new files, then ``commitInfo``. A sink commit only appends
+  (merge-on-read: readers fold a bucket's files with ``lww_merge``); a
+  compaction commit also carries ``remove`` actions for every file of
+  the buckets it folds into one.
 * **Atomic publish = put-if-absent of the version file.** The spec
   requires the log store to fail if the version exists; on POSIX that is
   ``os.link`` (CAS, loser gets EEXIST), the same primitive the manifest
@@ -273,20 +275,24 @@ class DeltaLogStore:
 
     def commit(
         self,
-        merged_touched: DataFrame,
-        touched: list[int],
+        rows: DataFrame,
+        touched: list[int] | None,
         batch_id: int,
         replace_all_touched: bool = False,
-    ) -> None:
-        """Stage new data files for the touched buckets, then publish the
-        next log version via put-if-absent. Crash before the publish ⇒
-        staged/moved files no version references — invisible to every
-        reader; the retry writes FRESH uniquely-named files (never
-        touching anything already on disk) and the crashed attempt's
-        orphans wait for ``gc``'s vacuum. A concurrent writer racing for
+    ) -> list[int]:
+        """Stage new data files, then publish the next log version via
+        put-if-absent. Same semantics as ``TxSnapshotStore.commit``: by
+        default an APPEND — ``add`` actions for the new files and no
+        ``remove``; with ``replace_all_touched`` (compaction) every file
+        of each bucket in ``touched`` is removed as well. Crash before
+        the publish ⇒ staged/moved files no version references —
+        invisible to every reader; the retry writes FRESH uniquely-named
+        files (never touching anything already on disk) and the crashed
+        attempt's orphans wait for ``gc``'s vacuum. A concurrent writer racing for
         the same version loses the CAS loudly AFTER staging only its own
         uniquely-named files — the winner's committed data is never
-        deleted or overwritten."""
+        deleted or overwritten. Returns the buckets whose file sets
+        changed."""
         prev = self.latest_manifest()
         delta_v = 0 if prev is None else prev["version"]
         # stage via Spark's parquet writer, then move into the table's
@@ -297,7 +303,7 @@ class DeltaLogStore:
         token = uuid.uuid4().hex[:12]
         staging = os.path.join(self.state_dir, f"_staging-{delta_v}-{token}")
         shutil.rmtree(staging, ignore_errors=True)
-        merged_touched.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        rows.write.mode("overwrite").partitionBy("bucket").parquet(staging)
         adds: list[dict] = []
         import time as _time
 
@@ -329,27 +335,24 @@ class DeltaLogStore:
                     }
                 )
         shutil.rmtree(staging, ignore_errors=True)
-        staged_buckets = {a["add"]["partitionValues"]["bucket"] for a in adds}
         removes: list[dict] = []
-        if prev is not None:
-            for b in touched:
-                # a touched bucket replaced only if the batch produced a
-                # file for it (an empty batch partition keeps the old set)
-                # — EXCEPT under compaction semantics (replace_all_touched,
-                # compact_tombstones), where "no staged file" means the
-                # bucket's rows were all expired tombstones: emit the
-                # removes with no adds
-                if replace_all_touched or str(b) in staged_buckets:
-                    for old in prev["buckets"].get(str(b), []):
-                        removes.append(
-                            {
-                                "remove": {
-                                    "path": old,
-                                    "deletionTimestamp": now_ms,
-                                    "dataChange": True,
-                                }
+        if replace_all_touched:
+            changed = sorted(touched)
+            for b in changed:
+                for old in (prev or {"buckets": {}})["buckets"].get(str(b), []):
+                    removes.append(
+                        {
+                            "remove": {
+                                "path": old,
+                                "deletionTimestamp": now_ms,
+                                "dataChange": True,
                             }
-                        )
+                        }
+                    )
+        else:
+            changed = sorted(
+                {int(a["add"]["partitionValues"]["bucket"]) for a in adds}
+            )
         actions: list[dict] = []
         if delta_v == 0:
             actions.extend(self._initial_actions())
@@ -362,7 +365,7 @@ class DeltaLogStore:
                     "operation": "STREAMING UPDATE"
                     if delta_v
                     else "CREATE TABLE AS SELECT",
-                    "operationParameters": {"touchedBuckets": len(touched)},
+                    "operationParameters": {"touchedBuckets": len(changed)},
                     "timestamp": now_ms,
                 }
             }
@@ -373,6 +376,7 @@ class DeltaLogStore:
         # age), without waiting for a maintenance gc()
         if delta_v > 0 and delta_v % 10 == 0:
             self._write_checkpoint(delta_v)
+        return changed
 
     def _publish(self, delta_v: int, actions: list[dict], adds: list[dict]) -> None:
         """Publish one log version via put-if-absent (the spec's commit

@@ -26,9 +26,18 @@ transactional table formats use, reduced to its minimum:
   the classic foreachBatch double-fire) is SKIPPED, not re-merged, so
   exactly-once is enforced at the commit, not argued from LWW algebra.
 
-Per-batch I/O stays O(touched state): untouched buckets' file lists are
-carried into the new manifest verbatim; only touched buckets are read,
-merged (keyed LWW by ``last_seq``, tombstones retained) and rewritten.
+Merge-on-read: a commit only APPENDS. Each batch's update rows are
+written as one delta file per bucket they fall in and appended to that
+bucket's file list; untouched buckets' lists are carried into the new
+manifest verbatim, and no commit reads current state. Readers fold a
+bucket's base + delta files with ``lww_merge`` (keyed LWW by
+``last_seq``, tombstones retained) — the same fold for both store
+backends and every Spark reader (`read_manifest_files`). Compaction is
+an ordinary commit that REPLACES a bucket's files with one folded base
+file: ``merge_commit`` runs it for any bucket listing more than
+``MAX_BUCKET_FILES`` files, and `compact_tombstones` runs it to drop
+expired tombstones. This is the copy-on-write → merge-on-read trade of
+Iceberg v2 row-level deletes and Delta deletion vectors.
 Crash-consistency and replay-skip are proven in
 tests/test_streaming.py::test_tx_sink_*.
 """
@@ -46,22 +55,31 @@ from pyspark.sql import functions as F
 from .cdc_stream import N_STATE_BUCKETS, UPDATES_SCHEMA, bucket_expr, lww_merge
 
 
+# a commit leaves at most this many files in a bucket's list: one that
+# lists more is compacted into one base file by `merge_commit`
+MAX_BUCKET_FILES = 8
+UPDATE_COLS = ["id", "content", "last_seq", "updated_at", "is_deleted"]
+
+
 def read_manifest_files(
     spark: SparkSession, state_dir: str, manifest: dict | None, n_buckets: int
 ) -> DataFrame:
     """A committed snapshot as a DataFrame: exactly the manifest's file
-    set, bucket RECOMPUTED from the key (a pure function of id), not
+    set, folded per key with `lww_merge` (a bucket's base and delta
+    files hold several rows of a key; the newest ``last_seq`` wins). The
+    bucket is RECOMPUTED from the key (a pure function of id), not
     parsed from the directory layout — leaf-file reads skip partition
-    discovery, and deriving beats parsing anyway. Shared by both store
-    backends so read semantics stay identical by construction."""
+    discovery. Shared by both store backends so read semantics stay
+    identical by construction."""
     files = [
         f for fl in (manifest or {"buckets": {}})["buckets"].values() for f in fl
     ]
     if not files:
         return spark.createDataFrame([], UPDATES_SCHEMA + ", bucket int")
-    return spark.read.parquet(
+    rows = spark.read.parquet(
         *[os.path.join(state_dir, f) for f in files]
     ).withColumn("bucket", bucket_expr(n_buckets))
+    return lww_merge(rows).select(*UPDATE_COLS, "bucket")
 
 
 class TxSnapshotStore:
@@ -131,33 +149,35 @@ class TxSnapshotStore:
 
     def commit(
         self,
-        merged_touched: DataFrame,
-        touched: list[int],
+        rows: DataFrame,
+        touched: list[int] | None,
         batch_id: int,
         replace_all_touched: bool = False,
-    ) -> None:
-        """Write new data files for the touched buckets, then publish a
-        new manifest atomically. Crash before the final rename ⇒ orphan
-        data files, old manifest still current, snapshot consistent."""
+    ) -> list[int]:
+        """Write ``rows`` (``UPDATES_SCHEMA`` plus ``bucket``) as new data
+        files, then publish a new manifest atomically. By default the
+        commit APPENDS: each bucket the rows fall in gets its new files
+        appended to its list (``touched`` is not consulted). With
+        ``replace_all_touched`` (compaction) each bucket in ``touched``
+        gets exactly the new files as its list — possibly none, when
+        every remaining row was an expired tombstone. Crash before the
+        final link ⇒ orphan data files, old manifest still current,
+        snapshot consistent. Returns the buckets whose lists changed."""
         prev = self.latest_manifest() or {"version": 0, "batch_id": -1, "buckets": {}}
         version = prev["version"] + 1
         gen_dir = os.path.join(self.data_dir, f"gen-{version}")
         shutil.rmtree(gen_dir, ignore_errors=True)  # leftovers from a crash
-        merged_touched.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
+        rows.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
         buckets = dict(prev["buckets"])  # untouched entries carried verbatim
         new_files = self._bucket_files(gen_dir)
-        for b in touched:
-            if replace_all_touched:
-                # compaction semantics (compact_tombstones): a touched
-                # bucket's new content IS the staged set — possibly
-                # nothing, when every remaining row was an expired
-                # tombstone
+        if replace_all_touched:
+            changed = sorted(touched)
+            for b in changed:
                 buckets[str(b)] = new_files.get(str(b), [])
-            # a touched bucket may legitimately produce no file (all rows
-            # merged away is impossible under retained tombstones, but an
-            # empty batch partition is) — keep the old list then
-            elif str(b) in new_files:
-                buckets[str(b)] = new_files[str(b)]
+        else:
+            changed = sorted(int(b) for b in new_files)
+            for b, fl in new_files.items():
+                buckets[b] = buckets.get(b, []) + fl
         manifest = {"version": version, "batch_id": batch_id, "buckets": buckets}
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.manifest_dir, f".v{version}.json.tmp")
@@ -184,6 +204,7 @@ class TxSnapshotStore:
             ) from e
         finally:
             os.unlink(tmp)
+        return changed
 
     def gc(self, retain_versions: int = 1) -> int:
         """Delete data generations referenced by NONE of the newest
@@ -256,6 +277,36 @@ def open_store(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
     return TxSnapshotStore(state_dir, n_buckets)
 
 
+def compact(
+    store, spark: SparkSession, buckets: list[int], horizon_seq: int | None = None
+) -> None:
+    """Fold each of ``buckets`` into ONE base file: read the bucket's
+    base + delta files through the reader's `lww_merge`, drop the
+    tombstones with ``last_seq <= horizon_seq`` when a horizon is given,
+    and publish the result as a ``replace_all_touched`` commit — a
+    normal commit (immutable files + atomic pointer publish) that
+    re-uses the previous manifest's ``batch_id``, so the replay-skip
+    frontier is unchanged and readers switch atomically from the
+    uncompacted to the compacted view. Untouched buckets' files carry
+    over verbatim; reclaiming the superseded files is ``store.gc()``'s
+    job, as for any commit."""
+    prev = store.latest_manifest() if buckets else None
+    if prev is None:
+        return
+    part = {"buckets": {str(b): prev["buckets"].get(str(b), []) for b in buckets}}
+    rows = read_manifest_files(spark, store.state_dir, part, store.n_buckets)
+    if horizon_seq is not None:
+        rows = rows.filter(~_expired(horizon_seq))
+    store.commit(
+        rows.repartition("bucket"), buckets, prev["batch_id"],
+        replace_all_touched=True,
+    )
+
+
+def _expired(horizon_seq: int):
+    return F.col("is_deleted") & (F.col("last_seq") <= F.lit(horizon_seq))
+
+
 def compact_tombstones(store, spark: SparkSession, horizon_seq: int) -> int:
     """Watermark-gated tombstone GC — the state-retention policy the
     CDC fold needs at production churn (SURVEY §7's own hard list:
@@ -277,53 +328,43 @@ def compact_tombstones(store, spark: SparkSession, horizon_seq: int) -> int:
       update has ``last_seq > horizon_seq`` (the same contract as
       ``withWatermark`` on event time).
 
-    Tombstones with ``last_seq <= horizon_seq`` are dropped by
-    committing a COMPACTION snapshot over the affected buckets — a
-    normal commit (immutable files + atomic pointer publish) that
-    re-uses the previous manifest's ``batch_id``, so the replay-skip
-    frontier is unchanged and readers switch atomically from the
-    uncompacted to the compacted view. Untouched buckets' files carry
-    over verbatim; reclaiming the superseded files is ``store.gc()``'s
-    job, as for any commit. Returns the number of tombstones dropped.
+    Tombstones with ``last_seq <= horizon_seq`` (in the folded view) are
+    dropped by `compact`-ing exactly the buckets that hold one: each is
+    folded into one base file without them, so no older delta file of
+    the bucket survives to resurrect the key. Returns the number of
+    tombstones dropped.
 
     Replay-safety is proven in tests/test_streaming.py::
     test_tombstone_gc_* (parametrized over both protocols): fold N
     batches, compact, replay old batches → state identical, and the raw
     snapshot hash-matches the live fold (no tombstone survives)."""
-    prev = store.latest_manifest()
-    if prev is None:
-        return 0
-    snap = store.read(spark)
-    expired = F.col("is_deleted") & (F.col("last_seq") <= F.lit(horizon_seq))
-    touched = [
-        r["bucket"]
-        for r in snap.filter(expired).select("bucket").distinct().collect()
-    ]  # ≤ n_buckets ints — bounded metadata
-    if not touched:
-        return 0
-    kept = snap.filter(F.col("bucket").isin(touched)).filter(~expired).persist()
-    try:
-        n_before = snap.filter(F.col("bucket").isin(touched)).count()
-        n_after = kept.count()  # also materializes `kept` pre-commit
-        store.commit(
-            kept, touched, batch_id=prev["batch_id"], replace_all_touched=True
-        )
-    finally:
-        kept.unpersist()
-    return n_before - n_after
+    per_bucket = (
+        store.read(spark).filter(_expired(horizon_seq)).groupBy("bucket").count()
+    ).collect()  # ≤ n_buckets rows — bounded metadata
+    compact(store, spark, [r["bucket"] for r in per_bucket], horizon_seq)
+    return sum(r["count"] for r in per_bucket)
 
 
 def merge_commit(
-    store, spark: SparkSession, updates: DataFrame, touched: list[int], batch_id: int
+    store, spark: SparkSession, updates: DataFrame, batch_id: int
 ) -> None:
-    """THE touched-bucket merge + commit, shared by `tx_snapshot_sink` and
-    the REST serve loop (serving/rest_api.py): read the store's current
-    rows of the ``touched`` buckets, fold them with ``updates`` (rows of
-    ``UPDATES_SCHEMA`` plus ``bucket``) through `lww_merge` and publish
-    the result as ONE atomic commit recording ``batch_id``. Untouched
-    buckets keep their file lists verbatim (`TxSnapshotStore.commit`)."""
-    cur = store.read(spark).filter(F.col("bucket").isin(touched))
-    store.commit(lww_merge(cur.unionByName(updates)), touched, batch_id)
+    """THE snapshot commit, shared by `tx_snapshot_sink`, the REST serve
+    loop (serving/rest_api.py) and the Delta source operators: write
+    ``updates`` (``UPDATES_SCHEMA`` rows) repartitioned by bucket — one
+    delta file per bucket they fall in — and publish them as ONE atomic
+    append commit recording ``batch_id``. Current state is never read:
+    readers fold base + deltas with `lww_merge`. Any bucket whose list
+    then holds more than ``MAX_BUCKET_FILES`` files is compacted into
+    one base file (`compact`); the touched buckets are taken from the
+    files the commit wrote."""
+    rows = updates.select(*UPDATE_COLS).withColumn(
+        "bucket", bucket_expr(store.n_buckets)
+    )
+    touched = store.commit(rows.repartition("bucket"), None, batch_id)
+    lists = store.latest_manifest()["buckets"]
+    compact(
+        store, spark, [b for b in touched if len(lists[str(b)]) > MAX_BUCKET_FILES]
+    )
 
 
 def tx_snapshot_sink(
@@ -336,15 +377,17 @@ def tx_snapshot_sink(
     tombstone_ttl_seqs: int | None = None,
 ):
     """foreachBatch sink with ATOMIC snapshot commits (module docstring):
-    each micro-batch's updates are merged into the touched buckets by
-    `lww_merge` (keyed LWW by last_seq, tombstones retained), and a
-    reader sees the previous manifest until the instant the new one is
-    published.
+    each micro-batch's updates are appended by `merge_commit` as
+    per-bucket delta files, readers fold them with `lww_merge` (keyed LWW
+    by last_seq, tombstones retained), and a reader sees the previous
+    manifest until the instant the new one is published. Without a TTL
+    a data micro-batch is ONE Spark job: the upstream stateful fold and
+    the delta-file write run together.
 
     ``on_before_commit(batch_id)`` is a fault-injection seam for the
     crash tests — it runs after the replay skip and the TTL contract
-    check, and BEFORE `merge_commit` reads the touched buckets, merges
-    and writes any data file. A crash between the data-file write and
+    check, and BEFORE the single fold + write job of `merge_commit`
+    writes any data file. A crash between the data-file write and
     the publish is injected at the publish itself (tests/
     test_streaming.py::test_tx_sink_torn_publish_*). Production passes
     None.
@@ -385,11 +428,12 @@ def tx_snapshot_sink(
             # return).
             batch_df.count()
             return
-        if (
-            tombstone_ttl_seqs is not None
-            and frontier["max"] is None
-            and prev is not None
-        ):
+        if tombstone_ttl_seqs is None:
+            if on_before_commit is not None:
+                on_before_commit(batch_id)
+            merge_commit(store, spark, batch_df, batch_id)
+            return
+        if frontier["max"] is None and prev is not None:
             # Rehydrate the seq watermark from DURABLE state on the
             # first batch after a (re)start: the frontier is closure
             # state and resets to None, but the tombstone compaction it
@@ -413,61 +457,53 @@ def tx_snapshot_sink(
                 ),
                 default=None,
             )
+        # persisted as a projection: Spark cannot cache the bare
+        # foreachBatch frame of a stateful query (InMemoryRelation fails
+        # with "key not found" on its output attributes)
         batch_df = batch_df.withColumn("bucket", bucket_of).persist()
         try:
-            touched = [
-                r["bucket"] for r in batch_df.select("bucket").distinct().collect()
-            ]  # ≤ n_buckets ints — bounded metadata
-            if not touched:
+            # Enforce the watermark CONTRACT before committing, not just
+            # assume it: ttl promises no update arrives more than ttl
+            # seqs late, and every tombstone at or below frontier - ttl
+            # is already physically gone — a batch row at or below that
+            # horizon could silently resurrect a deleted key (its
+            # suppressing tombstone no longer exists to win the LWW
+            # fold). One bounded 1-row aggregate yields both ends of the
+            # batch's seq range (both None for an empty batch); a
+            # violation fails the stream loudly pre-commit rather than
+            # publishing corrupt state (round-8 advice).
+            agg = batch_df.agg(
+                F.min("last_seq").alias("mn"), F.max("last_seq").alias("mx")
+            ).collect()[0]
+            mn, mx = agg["mn"], agg["mx"]
+            if mn is None:
                 return
-            if tombstone_ttl_seqs is not None:
-                # Enforce the watermark CONTRACT before committing, not
-                # just assume it: ttl promises no update arrives more
-                # than ttl seqs late, and every tombstone at or below
-                # frontier - ttl is already physically gone — a batch
-                # row at or below that horizon could silently resurrect
-                # a deleted key (its suppressing tombstone no longer
-                # exists to win the LWW merge). One bounded 1-row
-                # aggregate yields both ends of the batch's seq range;
-                # a violation fails the stream loudly pre-commit rather
-                # than publishing corrupt state (round-8 advice).
-                agg = batch_df.agg(
-                    F.min("last_seq").alias("mn"), F.max("last_seq").alias("mx")
-                ).collect()[0]
-                mn, mx = agg["mn"], agg["mx"]
-                if (
-                    mn is not None
-                    and frontier["max"] is not None
-                    and mn <= frontier["max"] - tombstone_ttl_seqs
-                ):
-                    raise RuntimeError(
-                        f"tombstone TTL contract violated: batch "
-                        f"{batch_id} contains last_seq={mn} at or below "
-                        f"the compacted horizon "
-                        f"{frontier['max'] - tombstone_ttl_seqs} "
-                        f"(frontier={frontier['max']}, "
-                        f"ttl={tombstone_ttl_seqs}); the source promised "
-                        "no update arrives more than ttl seqs late"
-                    )
+            if (
+                frontier["max"] is not None
+                and mn <= frontier["max"] - tombstone_ttl_seqs
+            ):
+                raise RuntimeError(
+                    f"tombstone TTL contract violated: batch "
+                    f"{batch_id} contains last_seq={mn} at or below "
+                    f"the compacted horizon "
+                    f"{frontier['max'] - tombstone_ttl_seqs} "
+                    f"(frontier={frontier['max']}, "
+                    f"ttl={tombstone_ttl_seqs}); the source promised "
+                    "no update arrives more than ttl seqs late"
+                )
             if on_before_commit is not None:
                 on_before_commit(batch_id)
-            merge_commit(store, spark, batch_df, touched, batch_id)
-            if tombstone_ttl_seqs is not None:
-                # live retention (docstring): the pre-commit aggregate
-                # advances the seq watermark, then tombstones behind
-                # frontier - ttl are compacted — an ordinary commit over
-                # only the buckets holding one
-                if mx is not None and (
-                    frontier["max"] is None or mx > frontier["max"]
-                ):
-                    frontier["max"] = mx
-                if frontier["max"] is not None:
-                    # durable BEFORE the compaction it licenses — the
-                    # restart rehydration above depends on this ordering
-                    _write_frontier(state_dir, frontier["max"])
-                    compact_tombstones(
-                        store, spark, frontier["max"] - tombstone_ttl_seqs
-                    )
+            merge_commit(store, spark, batch_df, batch_id)
+            # live retention (docstring): the pre-commit aggregate
+            # advances the seq watermark, then tombstones behind
+            # frontier - ttl are compacted — an ordinary commit over
+            # only the buckets holding one
+            if frontier["max"] is None or mx > frontier["max"]:
+                frontier["max"] = mx
+            # durable BEFORE the compaction it licenses — the restart
+            # rehydration above depends on this ordering
+            _write_frontier(state_dir, frontier["max"])
+            compact_tombstones(store, spark, frontier["max"] - tombstone_ttl_seqs)
         finally:
             batch_df.unpersist()
 

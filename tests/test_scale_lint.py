@@ -131,10 +131,12 @@ def test_no_unvetted_driver_collects_in_engine_source():
             "none: touched-bucket discovery lives in the tx sink",
         ),
         "streaming/tx_snapshot.py": (
-            4,
-            "<= n_buckets ints of touched-bucket ids (sink merge + "
-            "tombstone compaction) and two 1-row MAX(last_seq) watermark "
-            "aggregates (live TTL advance + restart rehydration)",
+            3,
+            "<= n_buckets (bucket, count) rows of the buckets holding an "
+            "expired tombstone (tombstone compaction) and two 1-row "
+            "MIN/MAX(last_seq) watermark aggregates (live TTL contract "
+            "check + restart rehydration); the sink's append commit "
+            "collects nothing",
         ),
         "streaming/ann_ingest.py": (
             6,
@@ -156,11 +158,10 @@ def test_no_unvetted_driver_collects_in_engine_source():
             "write set (dynamic partition overwrite of touched buckets)",
         ),
         "sources/file_formats.py": (
-            3,
-            "<= n_buckets ints of touched-bucket ids (delta roundtrip + "
-            "change-feed fixture); 40 LIMIT-bounded fixture rows "
-            "(binaryFile blob fixture — production blobs land from the "
-            "upstream store)",
+            1,
+            "40 LIMIT-bounded fixture rows (binaryFile blob fixture — "
+            "production blobs land from the upstream store); the Delta "
+            "operators commit through merge_commit and collect nothing",
         ),
         "session.py": (2, "64-row session warmup, corpus-independent"),
         "functions/similarity.py": (

@@ -285,10 +285,11 @@ def test_streaming_session_windows_match_batch(spark, sf_smoke, tmp_path):
 
 @pytest.mark.parametrize("backend", ["manifest", "delta"])
 def test_snapshot_sink_rewrites_only_touched_buckets(spark, tmp_path, backend):
-    """The tx snapshot sink must do O(touched state) I/O per batch: a
-    micro-batch updating one key rewrites ONLY that key's bucket — every
-    other bucket's file list is carried into the next committed version
-    verbatim (the local analog of MERGE INTO's file-level pruning)."""
+    """The tx snapshot sink must do O(batch) I/O per batch: a micro-batch
+    updating one key only APPENDS a delta file to that key's bucket.
+    Every prior file of every bucket, touched or not, is carried into
+    the next committed version verbatim, and new files appear only in
+    the touched bucket."""
     from datetime import datetime
 
     from cdc_cloudrun_demo_spark.streaming.tx_snapshot import open_store
@@ -324,9 +325,13 @@ def test_snapshot_sink_rewrites_only_touched_buckets(spark, tmp_path, backend):
     )
     assert set(after["buckets"]) == set(before["buckets"])
     for b, files in before["buckets"].items():
-        if b != touched:
-            assert after["buckets"][b] == files, f"untouched bucket {b} rewritten"
-    assert after["buckets"][touched] != before["buckets"][touched]
+        assert after["buckets"][b][: len(files)] == files, f"bucket {b} rewritten"
+        added = after["buckets"][b][len(files):]
+        if b == touched:
+            assert len(added) == 1, f"touched bucket gained {added}"
+            assert not set(added) & set(files)
+        else:
+            assert not added, f"untouched bucket {b} gained {added}"
 
     # and the final state reflects the update
     final = {r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()}
@@ -451,9 +456,14 @@ def test_tx_sink_atomic_visibility_under_crash(spark, tmp_path, backend):
         for r in read_tx_snapshot(spark, state_dir, version=v_before).collect()
     } == phase1
 
-    # phase 3 touches every bucket, fully superseding generations 1 and 2;
-    # GC now reclaims both, and the committed snapshot survives the sweep
+    # phase 3 touches every bucket; compacting every bucket then folds its
+    # base + delta files into one new base, fully superseding generations
+    # 1 to 3 (merge-on-read commits only append, so only a compaction
+    # supersedes files). GC reclaims them, and the committed snapshot
+    # survives the sweep
     from datetime import datetime
+
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import compact
 
     rows3 = [
         (2000 + i, "UPDATE", i, f"final-{i}", datetime(2024, 1, 3, 0, 0, i % 60))
@@ -464,6 +474,7 @@ def test_tx_sink_atomic_visibility_under_crash(spark, tmp_path, backend):
     ).parquet(str(log_dir / "slice_002"))
     q = run_stream()
     assert q.awaitTermination(120)
+    compact(store, spark, [int(b) for b in store.latest_manifest()["buckets"]])
     assert store.gc() >= 2  # default retention collapses history to newest
     assert {
         r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()
@@ -684,6 +695,146 @@ def test_late_and_replayed_events_lose_across_batches(spark, tmp_path, backend):
     rows = {r["id"]: r for r in one_shot}
     assert rows[1]["is_deleted"] and rows[1]["content"] is None
     assert (rows[2]["content"], rows[2]["last_seq"]) == ("b2", 6)
+
+
+def _job_ids(spark, *groups) -> int:
+    """The newest Spark job id across ``groups`` (None = no job group).
+    Job ids grow monotonically, so a delta of this counts jobs even when
+    the status tracker no longer lists old ones."""
+    tracker = spark.sparkContext.statusTracker()
+    return max([-1, *(j for g in groups for j in tracker.getJobIdsForGroup(g))])
+
+
+def _pin_slice_order(log_dir, n: int) -> None:
+    """Deliver ``slice_000`` .. ``slice_<n-1>`` in name order (the file
+    source orders by modification time)."""
+    t0 = os.path.getmtime(str(log_dir / "slice_000"))
+    for i in range(n):
+        d = log_dir / f"slice_{i:03d}"
+        for f in os.listdir(str(d)):
+            os.utime(str(d / f), (t0 + i, t0 + i))
+
+
+def _churn_slices(spark, log_dir, n_slices: int, n_keys: int = 64) -> list:
+    """Write ``n_slices`` change-log slices, each touching every key:
+    updates, a rotating set of deletes and re-inserts, and one LATE event
+    per slice (a seq below the previous slice's) that must lose. Returns
+    all events."""
+    from datetime import datetime
+
+    events = []
+    for k in range(n_slices):
+        rows = [
+            (
+                (k + 1) * 1000 + i,
+                "DELETE" if (i + k) % 5 == 0 else "UPDATE",
+                i,
+                None if (i + k) % 5 == 0 else f"v{k}-{i}",
+                datetime(2024, 1, 1 + k, 0, 0, i % 60),
+            )
+            for i in range(n_keys)
+        ]
+        if k:
+            rows.append((k * 1000 - 1, "UPDATE", 1, "late", datetime(2024, 1, 1)))
+        _write_slice(spark, log_dir, k, rows)
+        events.extend(rows)
+    _pin_slice_order(log_dir, n_slices)
+    return events
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_tx_sink_runs_one_spark_job_per_micro_batch(spark, tmp_path, backend):
+    """Merge-on-read commits: without a TTL, a data micro-batch is ONE
+    Spark job — the upstream stateful fold and the delta-file write run
+    together, and the commit reads no current state. Counted as the
+    job-id delta over the query's job group and ungrouped jobs, the way
+    the benchmark counts Spark jobs per batch."""
+    log_dir = tmp_path / "log"
+    _churn_slices(spark, log_dir, 3)
+    j0 = _job_ids(spark, None)
+    q = _tx_stream(
+        spark, log_dir, str(tmp_path / "state"), str(tmp_path / "ckpt"), backend
+    )
+    _await(q)
+    data = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data) == 3
+    assert _job_ids(spark, None, str(q.runId)) - j0 == len(data)
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_appended_delta_files_read_as_the_fold(spark, tmp_path, backend):
+    """A bucket holding N appended delta files (one per micro-batch)
+    reads exactly as the copy-on-write fold of the whole log would:
+    the raw snapshot, tombstones included, equals the one-shot LWW fold,
+    and the live view (`read_tx_snapshot`) equals its live rows."""
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import open_store
+
+    n = 4
+    log_dir = tmp_path / "log"
+    state_dir = str(tmp_path / "state")
+    events = _churn_slices(spark, log_dir, n)
+    _await(_tx_stream(spark, log_dir, state_dir, str(tmp_path / "ckpt"), backend))
+    store = open_store(state_dir)
+    assert {len(fl) for fl in store.latest_manifest()["buckets"].values()} == {n}
+
+    cols = ["bucket", "id", "content", "last_seq", "updated_at", "is_deleted"]
+    fold = _update_rows(spark.createDataFrame(events, CHANGE_SCHEMA)).select(*cols)
+    assert sorted(store.read(spark).select(*cols).collect()) == sorted(fold.collect())
+    live = cols[1:-1]
+    got = read_tx_snapshot(spark, state_dir).select(*live).collect()
+    assert sorted(got) == sorted(
+        fold.filter(~F.col("is_deleted")).select(*live).collect()
+    )
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_crossing_the_file_cap_compacts_each_bucket_to_one_file(
+    spark, tmp_path, backend
+):
+    """`merge_commit` appends one delta file per touched bucket; the
+    commit that pushes a bucket's list past ``MAX_BUCKET_FILES`` is
+    followed by a compaction commit that folds each such bucket into one
+    base file. The compacted snapshot is identical to the appended one
+    it replaced, and the replay-skip frontier (``batch_id``) is kept."""
+    from cdc_cloudrun_demo_spark.streaming.delta_log import DeltaLogStore
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+        MAX_BUCKET_FILES,
+        TxSnapshotStore,
+        merge_commit,
+    )
+
+    cls = TxSnapshotStore if backend == "manifest" else DeltaLogStore
+    store = cls(str(tmp_path / "state"), n_buckets=4)
+
+    def batch(k: int):
+        return spark.createDataFrame(
+            [
+                (i, None if (i + k) % 3 == 0 else f"v{k}-{i}", k * 100 + i, None,
+                 (i + k) % 3 == 0)
+                for i in range(16)
+            ],
+            "id long, content string, last_seq long, updated_at timestamp,"
+            " is_deleted boolean",
+        )
+
+    for k in range(MAX_BUCKET_FILES):
+        merge_commit(store, spark, batch(k), batch_id=k)
+    lists = store.latest_manifest()["buckets"]
+    assert len(lists) == 4
+    assert {len(fl) for fl in lists.values()} == {MAX_BUCKET_FILES}
+
+    merge_commit(store, spark, batch(MAX_BUCKET_FILES), batch_id=MAX_BUCKET_FILES)
+    m = store.latest_manifest()
+    assert m["batch_id"] == MAX_BUCKET_FILES
+    assert {len(fl) for fl in m["buckets"].values()} == {1}
+    appended = store.manifest(m["version"] - 1)
+    assert {len(fl) for fl in appended["buckets"].values()} == {MAX_BUCKET_FILES + 1}
+    compacted = sorted(store.read(spark).collect())
+    assert compacted == sorted(store.read(spark, appended["version"]).collect())
+    k = MAX_BUCKET_FILES
+    assert sorted(r["content"] for r in compacted if not r["is_deleted"]) == sorted(
+        f"v{k}-{i}" for i in range(16) if (i + k) % 3
+    )
 
 
 def test_rate_source_cdc_replay_matches_closed_form(spark, tmp_path):
@@ -1126,6 +1277,7 @@ def test_tombstone_gc_replay_safe(spark, tmp_path, backend):
     a newer seq (that's LWW, not resurrection). Parametrized over both
     commit protocols."""
     from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+        compact,
         compact_tombstones,
         open_store,
         read_tx_snapshot,
@@ -1223,7 +1375,10 @@ def test_tombstone_gc_replay_safe(spark, tmp_path, backend):
     # ...until the watermark passes it
     assert compact_tombstones(store, spark, horizon_seq=2001) == 1
     assert store.read(spark).filter(F.col("is_deleted")).count() == 0
-    # vacuum after compaction: superseded generations reclaimed, state intact
+    # vacuum after compaction: superseded generations reclaimed, state
+    # intact. Commits only append, so fold every bucket into one base
+    # file first; every earlier generation is then superseded
+    compact(store, spark, [int(b) for b in store.latest_manifest()["buckets"]])
     assert store.gc() >= 1
     assert {
         r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()
@@ -1509,7 +1664,12 @@ def test_change_feed_null_content_update(spark, tmp_path):
         )
 
     store.commit(df([(1, None, 1, None, False)]), [0, 1], batch_id=0)
-    store.commit(df([(1, "now-set", 1, None, False)]), [0, 1], batch_id=1)
+    # a rewrite, not an append: two rows of one key at one last_seq would
+    # leave the fold's winner undefined
+    store.commit(
+        df([(1, "now-set", 1, None, False)]), [0, 1], batch_id=1,
+        replace_all_touched=True,
+    )
     feed = {
         (r["change_type"]): (r["content"])
         for r in store.change_feed(spark, from_version=1).collect()
