@@ -16,15 +16,15 @@ Architecture (the served table IS the CDC materializer's snapshot):
   request order) and goes through the SAME commit as the streaming
   materializer (`tx_snapshot.merge_commit`) into a `TxSnapshotStore`
   under ``log_dir``: the rows are APPENDED as one delta file per
-  touched bucket, without reading current state, and a bucket listing
-  more than ``MAX_BUCKET_FILES`` files is compacted into one base
-  file. Readers see manifest version N or N+1 in full — the
+  touched bucket, without reading current state; a bucket already
+  listing ``MAX_BUCKET_FILES`` files is folded into one base file by
+  the same commit. Readers see manifest version N or N+1 in full — the
   reference's ``@Transactional`` visibility.
 - **Reads need no Spark job.** The driver keeps the bounded PK index
   ``id → bucket``. A point read resolves its bucket's file list in the
   newest manifest under the mutex, then reads that bucket's base +
   delta files with pyarrow outside it, keeping the newest ``last_seq``
-  per id (the fold `lww_merge` gives Spark readers), cached by the
+  per id (`lww_merge`'s rule for Spark readers), cached by the
   bucket's file-list tuple. A commit carries untouched buckets' file
   lists verbatim, so a write reloads only the buckets it touched.
   ``GET /messages`` reads every bucket of ONE manifest, so it never
@@ -86,9 +86,10 @@ _READ_COLS = ["id", "content", "last_seq", "is_deleted"]
 
 def _read_rows(state_dir: str, files: tuple[str, ...]):
     """(id, content, is_deleted) of a bucket's committed base + delta
-    files, one row per id: the newest ``last_seq`` wins, the later file
-    on a tie (the readers' `lww_merge`, tombstones kept) — a plain
-    pyarrow read, no Spark job."""
+    files, one row per id: the newest ``last_seq`` wins, tombstones
+    kept — a plain pyarrow read, no Spark job. Rows of one id never
+    share a ``last_seq`` unless identical (`tx_snapshot.merge_commit`'s
+    contract), so no tie rule is needed here."""
     import pyarrow.parquet as pq
 
     newest: dict = {}

@@ -11,10 +11,13 @@ protocol (delta-io/delta PROTOCOL.md), implemented from the spec:
   a ``txn`` action (``appId``/``version``) — Delta's idempotent-writer
   primitive, which maps 1:1 onto the sink's batch_id replay-skip — plus
   ``add`` actions (path, partitionValues, size, modificationTime) for
-  the new files, then ``commitInfo``. A sink commit only appends
-  (merge-on-read: readers fold a bucket's files with ``lww_merge``); a
-  compaction commit also carries ``remove`` actions for every file of
-  the buckets it folds into one.
+  the new files, then ``commitInfo``. A sink commit appends
+  (merge-on-read: readers fold a bucket's files with ``lww_merge``),
+  plus ``remove`` actions for the files of a full bucket it folds into
+  one (``tx_snapshot.merge_commit``). A compaction commit of its own
+  (``tx_snapshot.compact``, also behind ``optimize``) keeps the
+  ``batch_id`` and flags its removes and adds ``dataChange: false``:
+  no live row changes (an expired tombstone it drops was not live).
 * **Atomic publish = put-if-absent of the version file.** The spec
   requires the log store to fail if the version exists; on POSIX that is
   ``os.link`` (CAS, loser gets EEXIST), the same primitive the manifest
@@ -52,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 import uuid
 from typing import Any
 
@@ -65,6 +69,10 @@ APP_ID = "cdc-tx-snapshot-sink"  # the txn action's appId (single stream)
 
 _LOG_FMT = "{:020d}.json"
 _CKPT_FMT = "{:020d}.checkpoint.parquet"
+
+
+def _now_ms() -> int:
+    return int(time.time() * 1000)
 
 
 def _state_schema_json(n_cols_schema: str = UPDATES_SCHEMA) -> str:
@@ -283,90 +291,53 @@ class DeltaLogStore:
         """Stage new data files, then publish the next log version via
         put-if-absent. Same semantics as ``TxSnapshotStore.commit``: by
         default an APPEND — ``add`` actions for the new files and no
-        ``remove``; with ``replace_all_touched`` (compaction) every file
-        of each bucket in ``touched`` is removed as well. Crash before
-        the publish ⇒ staged/moved files no version references —
-        invisible to every reader; the retry writes FRESH uniquely-named
-        files (never touching anything already on disk) and the crashed
-        attempt's orphans wait for ``gc``'s vacuum. A concurrent writer racing for
+        ``remove``; with ``replace_all_touched`` (compaction) every
+        previous file of each bucket in ``touched`` is removed as well,
+        and other buckets' new files are appended. A commit that
+        keeps the previous ``batch_id`` (`tx_snapshot.compact`) is a
+        rewrite of already-folded rows, logged as OPTIMIZE with
+        ``dataChange: false`` so change feeds skip it; a commit that
+        brings a new batch is a data change. Crash before the publish ⇒
+        staged/moved files no version references — invisible to every
+        reader; the retry writes FRESH uniquely-named files (never
+        touching anything already on disk) and the crashed attempt's
+        orphans wait for ``gc``'s vacuum. A concurrent writer racing for
         the same version loses the CAS loudly AFTER staging only its own
         uniquely-named files — the winner's committed data is never
         deleted or overwritten. Returns the buckets whose file sets
         changed."""
         prev = self.latest_manifest()
         delta_v = 0 if prev is None else prev["version"]
-        # stage via Spark's parquet writer, then move into the table's
-        # partition dirs under globally unique names (version + attempt
-        # token): no name can collide with a committed file or another
-        # in-flight attempt, so no pre-existing file is ever removed or
-        # replaced here
-        token = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.state_dir, f"_staging-{delta_v}-{token}")
-        shutil.rmtree(staging, ignore_errors=True)
-        rows.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        adds: list[dict] = []
-        import time as _time
-
-        now_ms = int(_time.time() * 1000)
-        for entry in sorted(os.listdir(staging)):
-            if not entry.startswith("bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            part_dir = os.path.join(self.state_dir, entry)
-            os.makedirs(part_dir, exist_ok=True)
-            parts = sorted(
-                f
-                for f in os.listdir(os.path.join(staging, entry))
-                if f.endswith(".parquet")
-            )
-            for i, f in enumerate(parts):
-                name = f"part-{delta_v:020d}-{i:05d}-{token}.snappy.parquet"
-                dst = os.path.join(part_dir, name)
-                os.replace(os.path.join(staging, entry, f), dst)
-                adds.append(
-                    {
-                        "add": {
-                            "path": f"{entry}/{name}",
-                            "partitionValues": {"bucket": b},
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        shutil.rmtree(staging, ignore_errors=True)
-        removes: list[dict] = []
-        if replace_all_touched:
-            changed = sorted(touched)
-            for b in changed:
-                for old in (prev or {"buckets": {}})["buckets"].get(str(b), []):
-                    removes.append(
-                        {
-                            "remove": {
-                                "path": old,
-                                "deletionTimestamp": now_ms,
-                                "dataChange": True,
-                            }
-                        }
-                    )
-        else:
-            changed = sorted(
-                {int(a["add"]["partitionValues"]["bucket"]) for a in adds}
-            )
+        data_change = prev is None or batch_id != prev["batch_id"]
+        adds = self._stage(
+            delta_v,
+            lambda d: rows.write.mode("overwrite").partitionBy("bucket").parquet(d),
+            data_change,
+        )
+        replaced = sorted(touched) if replace_all_touched else []
+        removes = self._removes(prev, replaced, data_change)
+        changed = sorted(
+            set(replaced)
+            | {int(a["add"]["partitionValues"]["bucket"]) for a in adds}
+        )
         actions: list[dict] = []
         if delta_v == 0:
             actions.extend(self._initial_actions())
         actions.append({"txn": {"appId": APP_ID, "version": batch_id}})
         actions.extend(removes)
         actions.extend(adds)
+        if not data_change:
+            operation = "OPTIMIZE"
+        elif delta_v:
+            operation = "STREAMING UPDATE"
+        else:
+            operation = "CREATE TABLE AS SELECT"
         actions.append(
             {
                 "commitInfo": {
-                    "operation": "STREAMING UPDATE"
-                    if delta_v
-                    else "CREATE TABLE AS SELECT",
+                    "operation": operation,
                     "operationParameters": {"touchedBuckets": len(changed)},
-                    "timestamp": now_ms,
+                    "timestamp": _now_ms(),
                 }
             }
         )
@@ -377,6 +348,66 @@ class DeltaLogStore:
         if delta_v > 0 and delta_v % 10 == 0:
             self._write_checkpoint(delta_v)
         return changed
+
+    def _stage(self, delta_v: int, write, data_change: bool) -> list[dict]:
+        """Run ``write(staging_dir)`` (a Spark write partitioned by
+        ``bucket``, possibly with finer partition dirs below it), then
+        move every parquet part into the table's ``bucket=<b>/`` dir
+        under a globally unique name (version + attempt token): no name
+        can collide with a committed file or another in-flight attempt,
+        so no pre-existing file is ever removed or replaced here.
+        Returns the ``add`` actions, in part order within each bucket."""
+        token = uuid.uuid4().hex[:12]
+        staging = os.path.join(self.state_dir, f"_staging-{delta_v}-{token}")
+        shutil.rmtree(staging, ignore_errors=True)
+        write(staging)
+        now_ms = _now_ms()
+        adds: list[dict] = []
+        for entry in sorted(os.listdir(staging)):
+            if not entry.startswith("bucket="):
+                continue
+            b = entry.split("=", 1)[1]
+            part_dir = os.path.join(self.state_dir, entry)
+            os.makedirs(part_dir, exist_ok=True)
+            parts = sorted(
+                os.path.join(root, f)
+                for root, _dirs, files in os.walk(os.path.join(staging, entry))
+                for f in files
+                if f.endswith(".parquet")
+            )
+            for i, src in enumerate(parts):
+                name = f"part-{delta_v:020d}-{i:05d}-{token}.snappy.parquet"
+                dst = os.path.join(part_dir, name)
+                os.replace(src, dst)
+                adds.append(
+                    {
+                        "add": {
+                            "path": f"{entry}/{name}",
+                            "partitionValues": {"bucket": b},
+                            "size": os.path.getsize(dst),
+                            "modificationTime": now_ms,
+                            "dataChange": data_change,
+                        }
+                    }
+                )
+        shutil.rmtree(staging, ignore_errors=True)
+        return adds
+
+    @staticmethod
+    def _removes(prev: dict | None, buckets, data_change: bool) -> list[dict]:
+        """``remove`` actions for every file ``prev`` lists in ``buckets``."""
+        now_ms = _now_ms()
+        return [
+            {
+                "remove": {
+                    "path": old,
+                    "deletionTimestamp": now_ms,
+                    "dataChange": data_change,
+                }
+            }
+            for b in buckets
+            for old in (prev or {"buckets": {}})["buckets"].get(str(b), [])
+        ]
 
     def _publish(self, delta_v: int, actions: list[dict], adds: list[dict]) -> None:
         """Publish one log version via put-if-absent (the spec's commit
@@ -552,25 +583,23 @@ class DeltaLogStore:
 
     # -- maintenance --------------------------------------------------------
     def optimize(self, spark: SparkSession, max_files_per_bucket: int = 1) -> int:
-        """The spec's OPTIMIZE (bin-packing compaction): rewrite every
+        """The spec's OPTIMIZE (bin-packing compaction): fold every
         bucket holding more than ``max_files_per_bucket`` data files
-        down to one file and publish the swap as a log version whose
-        remove+add actions carry ``dataChange: false`` — the protocol's
-        marker that the commit moved BYTES, not rows, so incremental
-        consumers (streams, change feeds) skip it instead of re-emitting
-        the table. Snapshot content is bit-identical (hash-proven by
-        `source_delta_optimize`); time travel to pre-OPTIMIZE versions
-        keeps working until vacuum reclaims the old files.
+        into one file through `tx_snapshot.compact` — the same
+        compaction the sink runs — and publish the swap as a log version
+        whose remove+add actions carry ``dataChange: false``, the
+        protocol's marker that the commit moved BYTES, not rows, so
+        incremental consumers (streams, change feeds) skip it instead of
+        re-emitting the table. The folded view is identical before and
+        after (hash-proven by `source_delta_optimize`); superseded rows
+        are dropped from the files, and time travel to pre-OPTIMIZE
+        versions keeps working until vacuum reclaims the old files.
+        Returns the number of files compacted away. Reference anchor:
+        delta-io PROTOCOL.md dataChange semantics; the local analog of
+        `layout_compaction_plan`'s bin-packing, executed
+        transactionally."""
+        from .tx_snapshot import compact
 
-        Plan shape: ONE Spark job — all fragmented buckets' files read
-        with basePath (the partition column re-attaches), repartitioned
-        BY bucket so each bucket's rows land in exactly one task, and
-        written partitionBy(bucket) → exactly one output file per
-        bucket; the per-bucket driver work is file bookkeeping over
-        ≤ n_buckets entries. Returns the number of files compacted away.
-        Reference anchor: delta-io PROTOCOL.md dataChange semantics;
-        the local analog of `layout_compaction_plan`'s bin-packing,
-        executed transactionally."""
         prev = self.latest_manifest()
         if prev is None:
             return 0
@@ -579,74 +608,7 @@ class DeltaLogStore:
             for b, fl in prev["buckets"].items()
             if len(fl) > max_files_per_bucket
         }
-        if not frag:
-            return 0
-        delta_v = prev["version"]
-        token = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.state_dir, f"_staging-{delta_v}-{token}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged = spark.read.option("basePath", self.state_dir).parquet(
-            *[os.path.join(self.state_dir, f) for fl in frag.values() for f in fl]
-        )
-        merged.repartition(len(frag), "bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(staging)
-        import time as _time
-
-        now_ms = int(_time.time() * 1000)
-        adds: list[dict] = []
-        for entry in sorted(os.listdir(staging)):
-            if not entry.startswith("bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            part_dir = os.path.join(self.state_dir, entry)
-            os.makedirs(part_dir, exist_ok=True)
-            parts = sorted(
-                f
-                for f in os.listdir(os.path.join(staging, entry))
-                if f.endswith(".parquet")
-            )
-            for i, f in enumerate(parts):
-                name = f"part-{delta_v:020d}-{i:05d}-{token}.snappy.parquet"
-                dst = os.path.join(part_dir, name)
-                os.replace(os.path.join(staging, entry, f), dst)
-                adds.append(
-                    {
-                        "add": {
-                            "path": f"{entry}/{name}",
-                            "partitionValues": {"bucket": b},
-                            "size": os.path.getsize(dst),
-                            "modificationTime": now_ms,
-                            "dataChange": False,
-                        }
-                    }
-                )
-        shutil.rmtree(staging, ignore_errors=True)
-        removes = [
-            {
-                "remove": {
-                    "path": old,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                }
-            }
-            for b, fl in sorted(frag.items())
-            for old in fl
-        ]
-        actions = (
-            removes
-            + adds
-            + [
-                {
-                    "commitInfo": {
-                        "operation": "OPTIMIZE",
-                        "operationParameters": {"compactedBuckets": len(frag)},
-                        "timestamp": now_ms,
-                    }
-                }
-            ]
-        )
-        self._publish(delta_v, actions, adds)
+        compact(self, spark, sorted(int(b) for b in frag))
         return sum(len(fl) for fl in frag.values())
 
     def optimize_zorder(
@@ -660,16 +622,17 @@ class DeltaLogStore:
         ``files_per_bucket`` z-range files per bucket — so each
         rewritten file covers a tight [min,max] of BOTH clustering
         columns and a range scan on either prunes files from parquet
-        footer stats alone (Delta's OPTIMIZE ZORDER BY). The commit is
-        the same remove+add with ``dataChange: false`` as plain
-        OPTIMIZE — bytes moved, zero rows changed — so snapshot content
-        is bit-identical (hash-proven by `source_delta_optimize_zorder`)
-        and change feeds skip it.
+        footer stats alone (Delta's OPTIMIZE ZORDER BY). The rewrite
+        reads the folded snapshot (`read`), so superseded rows are
+        dropped as in plain OPTIMIZE, and the commit is the same
+        remove+add with ``dataChange: false`` — the folded view is
+        unchanged, so snapshot content is bit-identical (hash-proven by
+        `source_delta_optimize_zorder`) and change feeds skip it.
 
-        Plan shape: one tiny global min/max aggregate of the two
-        columns broadcasts back onto a narrow per-row zkey expression
-        (the `layout_zorder_key` discipline — no global sort, no range
-        exchange); file assignment is exact integer division of the
+        Plan shape: the reader's fold, then one tiny global min/max
+        aggregate of the two columns broadcasts back onto a narrow
+        per-row zkey expression (the `layout_zorder_key` discipline — no
+        global sort, no range exchange); file assignment is exact integer division of the
         zkey span, and one repartition on (bucket, zfile) lands each
         output file's rows in exactly one task. Returns the number of
         files the rewrite replaced."""
@@ -682,16 +645,7 @@ class DeltaLogStore:
         if not old_files:
             return 0
         delta_v = prev["version"]
-        token = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.state_dir, f"_staging-{delta_v}-{token}")
-        shutil.rmtree(staging, ignore_errors=True)
-        merged = spark.read.option("basePath", self.state_dir).parquet(
-            *[
-                os.path.join(self.state_dir, f)
-                for fl in old_files.values()
-                for f in fl
-            ]
-        )
+        merged = self.read(spark)  # folded: superseded rows are dropped
         ca, cb = zorder_by
         bounds = merged.agg(
             F.min(ca).alias("a_mn"),
@@ -723,7 +677,7 @@ class DeltaLogStore:
             f"least({files_per_bucket - 1},"
             f" CAST(__zkey * {files_per_bucket} AS BIGINT) div {zmax + 1})"
         )
-        (
+        clustered = (
             merged.crossJoin(F.broadcast(bounds))
             .withColumn("__zkey", zkey)
             .withColumn("zfile", zfile)
@@ -733,61 +687,16 @@ class DeltaLogStore:
             )
             .sortWithinPartitions("bucket", "zfile", "__zkey")
             .drop("__zkey")  # narrow projection keeps the task-local order
-            .write.mode("overwrite")
-            .partitionBy("bucket", "zfile")
-            .parquet(staging)
         )
-        import time as _time
-
-        now_ms = int(_time.time() * 1000)
-        adds: list[dict] = []
-        for bdir in sorted(os.listdir(staging)):
-            if not bdir.startswith("bucket="):
-                continue
-            b = bdir.split("=", 1)[1]
-            part_dir = os.path.join(self.state_dir, bdir)
-            os.makedirs(part_dir, exist_ok=True)
-            for zdir in sorted(os.listdir(os.path.join(staging, bdir))):
-                if not zdir.startswith("zfile="):
-                    continue
-                z = int(zdir.split("=", 1)[1])
-                parts = sorted(
-                    f
-                    for f in os.listdir(os.path.join(staging, bdir, zdir))
-                    if f.endswith(".parquet")
-                )
-                for i, f in enumerate(parts):
-                    name = (
-                        f"part-{delta_v:020d}-z{z:03d}-{i:05d}-{token}"
-                        ".snappy.parquet"
-                    )
-                    dst = os.path.join(part_dir, name)
-                    os.replace(os.path.join(staging, bdir, zdir, f), dst)
-                    adds.append(
-                        {
-                            "add": {
-                                "path": f"{bdir}/{name}",
-                                "partitionValues": {"bucket": b},
-                                "size": os.path.getsize(dst),
-                                "modificationTime": now_ms,
-                                "dataChange": False,
-                            }
-                        }
-                    )
-        shutil.rmtree(staging, ignore_errors=True)
-        removes = [
-            {
-                "remove": {
-                    "path": old,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                }
-            }
-            for b, fl in sorted(old_files.items())
-            for old in fl
-        ]
+        adds = self._stage(
+            delta_v,
+            lambda d: clustered.write.mode("overwrite")
+            .partitionBy("bucket", "zfile")
+            .parquet(d),
+            data_change=False,
+        )
         actions = (
-            removes
+            self._removes(prev, sorted(old_files), data_change=False)
             + adds
             + [
                 {
@@ -797,7 +706,7 @@ class DeltaLogStore:
                             "zOrderBy": list(zorder_by),
                             "rewrittenBuckets": len(old_files),
                         },
-                        "timestamp": now_ms,
+                        "timestamp": _now_ms(),
                     }
                 }
             ]

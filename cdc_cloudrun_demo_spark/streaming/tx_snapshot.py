@@ -26,18 +26,22 @@ transactional table formats use, reduced to its minimum:
   the classic foreachBatch double-fire) is SKIPPED, not re-merged, so
   exactly-once is enforced at the commit, not argued from LWW algebra.
 
-Merge-on-read: a commit only APPENDS. Each batch's update rows are
-written as one delta file per bucket they fall in and appended to that
-bucket's file list; untouched buckets' lists are carried into the new
-manifest verbatim, and no commit reads current state. Readers fold a
+Merge-on-read: a commit APPENDS. Each batch's update rows are written
+as one delta file per bucket they fall in and appended to that bucket's
+file list; untouched buckets' lists are carried into the new manifest
+verbatim, and a commit reads no current state beyond the files of a
+bucket it compacts (below). Readers fold a
 bucket's base + delta files with ``lww_merge`` (keyed LWW by
 ``last_seq``, tombstones retained) — the same fold for both store
-backends and every Spark reader (`read_manifest_files`). Compaction is
-an ordinary commit that REPLACES a bucket's files with one folded base
-file: ``merge_commit`` runs it for any bucket listing more than
-``MAX_BUCKET_FILES`` files, and `compact_tombstones` runs it to drop
-expired tombstones. This is the copy-on-write → merge-on-read trade of
-Iceberg v2 row-level deletes and Delta deletion vectors.
+backends and every Spark reader (`read_manifest_files`). Compaction
+REPLACES a bucket's files with one folded base file: ``merge_commit``
+does it inside the commit for any bucket already listing
+``MAX_BUCKET_FILES`` files (its files are folded with the batch in the
+same write), `compact` does it as a commit of its own that keeps
+``batch_id`` — the path of `compact_tombstones`, which drops expired
+tombstones in the same pass, and of the Delta store's OPTIMIZE. This
+is the copy-on-write → merge-on-read trade of Iceberg v2 row-level
+deletes and Delta deletion vectors.
 Crash-consistency and replay-skip are proven in
 tests/test_streaming.py::test_tx_sink_*.
 """
@@ -48,6 +52,7 @@ import json
 import os
 import shutil
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,10 +60,43 @@ from pyspark.sql import functions as F
 from .cdc_stream import N_STATE_BUCKETS, UPDATES_SCHEMA, bucket_expr, lww_merge
 
 
-# a commit leaves at most this many files in a bucket's list: one that
-# lists more is compacted into one base file by `merge_commit`
-MAX_BUCKET_FILES = 8
+# the most files a bucket's list holds: `merge_commit` folds a bucket
+# that already lists this many into one base file. Measured on 24-slice
+# replays of the 100k-event change log (4-CPU VM; docs/SCALE.md §5): the
+# compacting micro-batch costs ~35 ms more per listed file, and a fold
+# read reads every listed file, while the median micro-batch was flat
+# from 4 to 16. 4 keeps both the compaction spike and reads small; 2
+# puts a compaction in every other micro-batch.
+MAX_BUCKET_FILES = 4
 UPDATE_COLS = ["id", "content", "last_seq", "updated_at", "is_deleted"]
+
+
+def _raw_rows(
+    spark: SparkSession, state_dir: str, manifest: dict | None, n_buckets: int
+) -> DataFrame | None:
+    """The manifest's files as rows, UNFOLDED (None when it lists no
+    file). The bucket is RECOMPUTED from the key (a pure function of
+    id), not parsed from the directory layout — leaf-file reads skip
+    partition discovery. Resolving the read runs no Spark job: the
+    schema is given, not inferred from a footer, and the files are read
+    in chunks of at most Spark's parallel-listing threshold, above which
+    listing them would itself be a job."""
+    paths = [
+        os.path.join(state_dir, f)
+        for fl in (manifest or {"buckets": {}})["buckets"].values()
+        for f in fl
+    ]
+    if not paths:
+        return None
+    step = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+    )
+    reader = spark.read.schema(UPDATES_SCHEMA)
+    rows = reduce(
+        DataFrame.unionByName,
+        [reader.parquet(*paths[i : i + step]) for i in range(0, len(paths), step)],
+    )
+    return rows.withColumn("bucket", bucket_expr(n_buckets))
 
 
 def read_manifest_files(
@@ -66,19 +104,12 @@ def read_manifest_files(
 ) -> DataFrame:
     """A committed snapshot as a DataFrame: exactly the manifest's file
     set, folded per key with `lww_merge` (a bucket's base and delta
-    files hold several rows of a key; the newest ``last_seq`` wins). The
-    bucket is RECOMPUTED from the key (a pure function of id), not
-    parsed from the directory layout — leaf-file reads skip partition
-    discovery. Shared by both store backends so read semantics stay
-    identical by construction."""
-    files = [
-        f for fl in (manifest or {"buckets": {}})["buckets"].values() for f in fl
-    ]
-    if not files:
+    files hold several rows of a key; the newest ``last_seq`` wins).
+    Shared by both store backends so read semantics stay identical by
+    construction."""
+    rows = _raw_rows(spark, state_dir, manifest, n_buckets)
+    if rows is None:
         return spark.createDataFrame([], UPDATES_SCHEMA + ", bucket int")
-    rows = spark.read.parquet(
-        *[os.path.join(state_dir, f) for f in files]
-    ).withColumn("bucket", bucket_expr(n_buckets))
     return lww_merge(rows).select(*UPDATE_COLS, "bucket")
 
 
@@ -159,8 +190,9 @@ class TxSnapshotStore:
         commit APPENDS: each bucket the rows fall in gets its new files
         appended to its list (``touched`` is not consulted). With
         ``replace_all_touched`` (compaction) each bucket in ``touched``
-        gets exactly the new files as its list — possibly none, when
-        every remaining row was an expired tombstone. Crash before the
+        gets exactly its new files as its list — possibly none, when
+        every remaining row was an expired tombstone — while the new
+        files of any other bucket are still appended. Crash before the
         final link ⇒ orphan data files, old manifest still current,
         snapshot consistent. Returns the buckets whose lists changed."""
         prev = self.latest_manifest() or {"version": 0, "batch_id": -1, "buckets": {}}
@@ -170,14 +202,13 @@ class TxSnapshotStore:
         rows.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
         buckets = dict(prev["buckets"])  # untouched entries carried verbatim
         new_files = self._bucket_files(gen_dir)
-        if replace_all_touched:
-            changed = sorted(touched)
-            for b in changed:
-                buckets[str(b)] = new_files.get(str(b), [])
-        else:
-            changed = sorted(int(b) for b in new_files)
-            for b, fl in new_files.items():
+        replaced = {str(b) for b in touched} if replace_all_touched else set()
+        for b in replaced:
+            buckets[b] = new_files.get(b, [])
+        for b, fl in new_files.items():
+            if b not in replaced:
                 buckets[b] = buckets.get(b, []) + fl
+        changed = sorted(int(b) for b in replaced | set(new_files))
         manifest = {"version": version, "batch_id": batch_id, "buckets": buckets}
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.manifest_dir, f".v{version}.json.tmp")
@@ -279,7 +310,7 @@ def open_store(state_dir: str, n_buckets: int = N_STATE_BUCKETS):
 
 def compact(
     store, spark: SparkSession, buckets: list[int], horizon_seq: int | None = None
-) -> None:
+) -> int:
     """Fold each of ``buckets`` into ONE base file: read the bucket's
     base + delta files through the reader's `lww_merge`, drop the
     tombstones with ``last_seq <= horizon_seq`` when a horizon is given,
@@ -289,18 +320,32 @@ def compact(
     frontier is unchanged and readers switch atomically from the
     uncompacted to the compacted view. Untouched buckets' files carry
     over verbatim; reclaiming the superseded files is ``store.gc()``'s
-    job, as for any commit."""
+    job, as for any commit. Returns the number of tombstones dropped
+    (0 without a horizon)."""
     prev = store.latest_manifest() if buckets else None
     if prev is None:
-        return
+        return 0
     part = {"buckets": {str(b): prev["buckets"].get(str(b), []) for b in buckets}}
-    rows = read_manifest_files(spark, store.state_dir, part, store.n_buckets)
-    if horizon_seq is not None:
-        rows = rows.filter(~_expired(horizon_seq))
-    store.commit(
-        rows.repartition("bucket"), buckets, prev["batch_id"],
-        replace_all_touched=True,
-    )
+    raw = _raw_rows(spark, store.state_dir, part, store.n_buckets)
+    if raw is None:  # nothing to fold: publish the buckets as empty
+        raw = spark.createDataFrame([], UPDATES_SCHEMA + ", bucket int")
+    # partitioned by bucket BEFORE the fold: the fold's clustering by
+    # (bucket, id) is then already met, so the fold and the one-file-
+    # per-bucket write share a single exchange
+    rows = lww_merge(raw.repartition("bucket")).select(*UPDATE_COLS, "bucket")
+    if horizon_seq is None:
+        store.commit(rows, buckets, prev["batch_id"], replace_all_touched=True)
+        return 0
+    rows = rows.persist()  # the fold feeds both the count and the write
+    try:
+        dropped = rows.filter(_expired(horizon_seq)).count()
+        store.commit(
+            rows.filter(~_expired(horizon_seq)), buckets, prev["batch_id"],
+            replace_all_touched=True,
+        )
+    finally:
+        rows.unpersist()
+    return dropped
 
 
 def _expired(horizon_seq: int):
@@ -328,21 +373,27 @@ def compact_tombstones(store, spark: SparkSession, horizon_seq: int) -> int:
       update has ``last_seq > horizon_seq`` (the same contract as
       ``withWatermark`` on event time).
 
-    Tombstones with ``last_seq <= horizon_seq`` (in the folded view) are
-    dropped by `compact`-ing exactly the buckets that hold one: each is
-    folded into one base file without them, so no older delta file of
-    the bucket survives to resurrect the key. Returns the number of
-    tombstones dropped.
+    The candidate buckets come from a NARROW scan of the raw files (no
+    fold, no shuffle): a bucket can hold an expired tombstone in the
+    folded view only if one of its files holds a tombstone with
+    ``last_seq <= horizon_seq``. Only those buckets are folded, by
+    `compact`, into one base file without their expired tombstones, so
+    no older delta file of the bucket survives to resurrect the key; a
+    bucket whose raw tombstone was already superseded is folded too,
+    which drops the superseded row. Returns the number of tombstones
+    dropped (counted in the folded view).
 
     Replay-safety is proven in tests/test_streaming.py::
     test_tombstone_gc_* (parametrized over both protocols): fold N
     batches, compact, replay old batches → state identical, and the raw
     snapshot hash-matches the live fold (no tombstone survives)."""
-    per_bucket = (
-        store.read(spark).filter(_expired(horizon_seq)).groupBy("bucket").count()
-    ).collect()  # ≤ n_buckets rows — bounded metadata
-    compact(store, spark, [r["bucket"] for r in per_bucket], horizon_seq)
-    return sum(r["count"] for r in per_bucket)
+    raw = _raw_rows(spark, store.state_dir, store.latest_manifest(), store.n_buckets)
+    if raw is None:
+        return 0
+    candidates = (
+        raw.filter(_expired(horizon_seq)).select("bucket").distinct().collect()
+    )  # ≤ n_buckets rows — bounded metadata
+    return compact(store, spark, sorted(r["bucket"] for r in candidates), horizon_seq)
 
 
 def merge_commit(
@@ -352,18 +403,51 @@ def merge_commit(
     loop (serving/rest_api.py) and the Delta source operators: write
     ``updates`` (``UPDATES_SCHEMA`` rows) repartitioned by bucket — one
     delta file per bucket they fall in — and publish them as ONE atomic
-    append commit recording ``batch_id``. Current state is never read:
-    readers fold base + deltas with `lww_merge`. Any bucket whose list
-    then holds more than ``MAX_BUCKET_FILES`` files is compacted into
-    one base file (`compact`); the touched buckets are taken from the
-    files the commit wrote."""
+    append commit recording ``batch_id``; the touched buckets are taken
+    from the files the commit wrote. Current state is not read —
+    readers fold base + deltas with `lww_merge` — with one exception,
+    compaction: a bucket whose list already holds ``MAX_BUCKET_FILES``
+    files is compacted by this commit. Its files join the batch's rows
+    ahead of the bucket exchange, are folded, and replace the list with
+    one base file, inside the same write. So no list exceeds
+    ``MAX_BUCKET_FILES`` files, and a micro-batch stays one Spark job
+    when it compacts.
+
+    Contract on ``last_seq`` (the one tie rule of the store): two rows
+    of a key, in one batch or across commits, never share a
+    ``last_seq`` unless they are the same write emitted again (the
+    stream re-emits a key's unchanged folded row when a late event
+    loses; a replayed batch is skipped before it gets here). Every
+    producer keeps it: the stream's seqs are the change log's, the
+    serve loop numbers its rows ``flush_no * SEQ_STRIDE + request
+    order``, the Delta source operators commit one row per key per
+    batch at distinct seqs. Which of two DIFFERENT rows at one
+    ``last_seq`` a fold keeps is unspecified — `lww_merge` and the
+    serve loop's pyarrow fold may pick differently."""
     rows = updates.select(*UPDATE_COLS).withColumn(
         "bucket", bucket_expr(store.n_buckets)
     )
-    touched = store.commit(rows.repartition("bucket"), None, batch_id)
-    lists = store.latest_manifest()["buckets"]
-    compact(
-        store, spark, [b for b in touched if len(lists[str(b)]) > MAX_BUCKET_FILES]
+    prev = store.latest_manifest() or {"buckets": {}}
+    full = sorted(
+        int(b) for b, fl in prev["buckets"].items() if len(fl) >= MAX_BUCKET_FILES
+    )
+    if not full:
+        store.commit(rows.repartition("bucket"), None, batch_id)
+        return
+    # a full bucket is compacted IN this commit: its files join the
+    # batch rows ahead of the bucket exchange, and the fold runs inside
+    # the one write (other buckets' rows are folded within the batch
+    # only, and their new file is appended as usual)
+    raw = _raw_rows(
+        spark,
+        store.state_dir,
+        {"buckets": {str(b): prev["buckets"][str(b)] for b in full}},
+        store.n_buckets,
+    )
+    folded = lww_merge(rows.unionByName(raw).repartition("bucket"))
+    store.commit(
+        folded.select(*UPDATE_COLS, "bucket"), full, batch_id,
+        replace_all_touched=True,
     )
 
 

@@ -746,19 +746,29 @@ def _churn_slices(spark, log_dir, n_slices: int, n_keys: int = 64) -> list:
 def test_tx_sink_runs_one_spark_job_per_micro_batch(spark, tmp_path, backend):
     """Merge-on-read commits: without a TTL, a data micro-batch is ONE
     Spark job — the upstream stateful fold and the delta-file write run
-    together, and the commit reads no current state. Counted as the
-    job-id delta over the query's job group and ungrouped jobs, the way
-    the benchmark counts Spark jobs per batch."""
+    together, and the commit reads no current state. The replay crosses
+    ``MAX_BUCKET_FILES``, so the batch that compacts every bucket counts
+    too: its fold runs inside the same job. Counted as the job-id delta
+    over the query's job group and ungrouped jobs, the way the benchmark
+    counts Spark jobs per batch."""
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+        MAX_BUCKET_FILES,
+        open_store,
+    )
+
+    n = MAX_BUCKET_FILES + 1
     log_dir = tmp_path / "log"
-    _churn_slices(spark, log_dir, 3)
+    _churn_slices(spark, log_dir, n)
     j0 = _job_ids(spark, None)
     q = _tx_stream(
         spark, log_dir, str(tmp_path / "state"), str(tmp_path / "ckpt"), backend
     )
     _await(q)
     data = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(data) == 3
+    assert len(data) == n
     assert _job_ids(spark, None, str(q.runId)) - j0 == len(data)
+    lists = open_store(str(tmp_path / "state")).latest_manifest()["buckets"]
+    assert {len(fl) for fl in lists.values()} == {1}
 
 
 @pytest.mark.parametrize("backend", ["manifest", "delta"])
@@ -788,18 +798,60 @@ def test_appended_delta_files_read_as_the_fold(spark, tmp_path, backend):
 
 
 @pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_snapshot_read_resolves_without_a_spark_job(spark, tmp_path, backend):
+    """Building a snapshot reader runs no Spark job, even when the
+    manifest lists more files than Spark's parallel-listing threshold:
+    the schema is given (no footer inference job) and the file list is
+    read in chunks below the threshold (no listing job). Only the
+    action on the folded frame runs jobs."""
+    from cdc_cloudrun_demo_spark.streaming.delta_log import DeltaLogStore
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+        TxSnapshotStore,
+        bucket_expr,
+    )
+
+    cls = TxSnapshotStore if backend == "manifest" else DeltaLogStore
+    store = cls(str(tmp_path / "state"), n_buckets=4)
+    threshold = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+    )
+    n_commits = threshold // 4 + 2
+    for k in range(n_commits):  # plain appends: nothing compacts
+        rows = spark.createDataFrame(
+            [(i, f"v{k}-{i}", k * 100 + i, None, False) for i in range(16)],
+            "id long, content string, last_seq long, updated_at timestamp,"
+            " is_deleted boolean",
+        ).withColumn("bucket", bucket_expr(4))
+        store.commit(rows.repartition("bucket"), None, batch_id=k)
+    n_files = sum(len(fl) for fl in store.latest_manifest()["buckets"].values())
+    assert n_files > threshold
+    j0 = _job_ids(spark, None)
+    snap = store.read(spark)
+    assert _job_ids(spark, None) == j0
+    k = n_commits - 1
+    assert sorted(r["content"] for r in snap.collect()) == sorted(
+        f"v{k}-{i}" for i in range(16)
+    )
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
 def test_crossing_the_file_cap_compacts_each_bucket_to_one_file(
     spark, tmp_path, backend
 ):
-    """`merge_commit` appends one delta file per touched bucket; the
-    commit that pushes a bucket's list past ``MAX_BUCKET_FILES`` is
-    followed by a compaction commit that folds each such bucket into one
-    base file. The compacted snapshot is identical to the appended one
-    it replaced, and the replay-skip frontier (``batch_id``) is kept."""
+    """`merge_commit` appends one delta file per touched bucket until a
+    bucket's list holds ``MAX_BUCKET_FILES`` files; the next commit
+    folds each such bucket's files with its own rows into ONE base
+    file, in the same commit. The compacted snapshot is
+    the copy-on-write fold of every batch, and the replay-skip frontier
+    (``batch_id``) is the new batch's."""
+    from functools import reduce
+
     from cdc_cloudrun_demo_spark.streaming.delta_log import DeltaLogStore
     from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
         MAX_BUCKET_FILES,
         TxSnapshotStore,
+        bucket_expr,
+        lww_merge,
         merge_commit,
     )
 
@@ -819,19 +871,24 @@ def test_crossing_the_file_cap_compacts_each_bucket_to_one_file(
 
     for k in range(MAX_BUCKET_FILES):
         merge_commit(store, spark, batch(k), batch_id=k)
-    lists = store.latest_manifest()["buckets"]
-    assert len(lists) == 4
-    assert {len(fl) for fl in lists.values()} == {MAX_BUCKET_FILES}
+    full = store.latest_manifest()
+    assert len(full["buckets"]) == 4
+    assert {len(fl) for fl in full["buckets"].values()} == {MAX_BUCKET_FILES}
 
-    merge_commit(store, spark, batch(MAX_BUCKET_FILES), batch_id=MAX_BUCKET_FILES)
-    m = store.latest_manifest()
-    assert m["batch_id"] == MAX_BUCKET_FILES
-    assert {len(fl) for fl in m["buckets"].values()} == {1}
-    appended = store.manifest(m["version"] - 1)
-    assert {len(fl) for fl in appended["buckets"].values()} == {MAX_BUCKET_FILES + 1}
-    compacted = sorted(store.read(spark).collect())
-    assert compacted == sorted(store.read(spark, appended["version"]).collect())
     k = MAX_BUCKET_FILES
+    merge_commit(store, spark, batch(k), batch_id=k)
+    m = store.latest_manifest()
+    assert m["version"] == full["version"] + 1
+    assert m["batch_id"] == k
+    assert {len(fl) for fl in m["buckets"].values()} == {1}
+    # the base files are folded: one row per key, superseded rows gone
+    files = [os.path.join(store.state_dir, f) for fl in m["buckets"].values() for f in fl]
+    assert spark.read.parquet(*files).count() == 16
+    cols = ["bucket", "id", "content", "last_seq", "updated_at", "is_deleted"]
+    every = reduce(lambda a, b: a.unionByName(b), [batch(j) for j in range(k + 1)])
+    fold = lww_merge(every.withColumn("bucket", bucket_expr(4))).select(*cols)
+    compacted = sorted(store.read(spark).select(*cols).collect())
+    assert compacted == sorted(fold.collect())
     assert sorted(r["content"] for r in compacted if not r["is_deleted"]) == sorted(
         f"v{k}-{i}" for i in range(16) if (i + k) % 3
     )
@@ -1383,6 +1440,116 @@ def test_tombstone_gc_replay_safe(spark, tmp_path, backend):
     assert {
         r["id"]: r["content"] for r in read_tx_snapshot(spark, state_dir).collect()
     } == want
+
+
+@pytest.mark.parametrize("backend", ["manifest", "delta"])
+def test_tombstone_compaction_folds_only_buckets_holding_one(
+    spark, tmp_path, backend
+):
+    """`compact_tombstones` finds its buckets with a narrow scan of the
+    raw files: a bucket whose files hold no tombstone at or below the
+    horizon is neither folded nor rewritten (its file list carries over
+    verbatim), while a bucket holding one — even one already superseded
+    by a re-insert — is folded into one base file. The count is taken
+    in the folded view, so the superseded tombstone does not count."""
+    from cdc_cloudrun_demo_spark.streaming.delta_log import DeltaLogStore
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import (
+        TxSnapshotStore,
+        bucket_expr,
+        compact_tombstones,
+        merge_commit,
+    )
+
+    cls = TxSnapshotStore if backend == "manifest" else DeltaLogStore
+    store = cls(str(tmp_path / "state"), n_buckets=4)
+    schema = (
+        "id long, content string, last_seq long, updated_at timestamp,"
+        " is_deleted boolean"
+    )
+    ids = list(range(32))
+    bucket = {
+        r["id"]: r["b"]
+        for r in spark.createDataFrame([(i,) for i in ids], "id long")
+        .select("id", bucket_expr(4).alias("b"))
+        .collect()
+    }
+    dead = ids[0]  # tombstoned, then left dead
+    back = next(i for i in ids if bucket[i] != bucket[dead])  # deleted, re-inserted
+    quiet = sorted(set(bucket.values()) - {bucket[dead], bucket[back]})
+    assert quiet, "fixture needs a bucket without tombstones"
+    merge_commit(
+        store, spark,
+        spark.createDataFrame([(i, f"v{i}", 10 + i, None, False) for i in ids], schema),
+        batch_id=0,
+    )
+    merge_commit(
+        store, spark,
+        spark.createDataFrame(
+            [(dead, None, 100, None, True), (back, None, 101, None, True)], schema
+        ),
+        batch_id=1,
+    )
+    merge_commit(
+        store, spark,
+        spark.createDataFrame([(back, "again", 102, None, False)], schema),
+        batch_id=2,
+    )
+    before = store.latest_manifest()
+    assert compact_tombstones(store, spark, horizon_seq=102) == 1
+    after = store.latest_manifest()
+    assert after["version"] == before["version"] + 1
+    for b in quiet:
+        assert after["buckets"][str(b)] == before["buckets"][str(b)]
+    for b in {bucket[dead], bucket[back]}:
+        assert len(after["buckets"][str(b)]) == 1
+    rows = {r["id"]: (r["content"], r["is_deleted"]) for r in store.read(spark).collect()}
+    assert dead not in rows and rows[back] == ("again", False)
+    assert len(rows) == len(ids) - 1
+    # nothing left at or below the horizon: no further commit
+    assert compact_tombstones(store, spark, horizon_seq=102) == 0
+    assert store.latest_manifest()["version"] == after["version"]
+
+
+def test_delta_optimize_folds_superseded_rows(spark, tmp_path):
+    """OPTIMIZE is the store's one compaction path (`tx_snapshot.compact`):
+    it folds a bucket's files, so superseded rows are gone from the
+    rewritten files, while the folded snapshot is unchanged and the
+    change feed emits nothing for the OPTIMIZE version."""
+    import pyarrow.parquet as pq
+
+    from cdc_cloudrun_demo_spark.streaming.delta_log import DeltaLogStore
+    from cdc_cloudrun_demo_spark.streaming.tx_snapshot import merge_commit
+
+    store = DeltaLogStore(str(tmp_path / "table"), n_buckets=4)
+    schema = (
+        "id long, content string, last_seq long, updated_at timestamp,"
+        " is_deleted boolean"
+    )
+    merge_commit(
+        store, spark,
+        spark.createDataFrame([(i, f"a{i}", 1, None, False) for i in range(40)], schema),
+        batch_id=0,
+    )
+    merge_commit(
+        store, spark,
+        spark.createDataFrame(
+            [(i, f"b{i}", 2, None, i % 4 == 0) for i in range(0, 40, 2)], schema
+        ),
+        batch_id=1,
+    )
+    m1 = store.latest_manifest()
+    before = sorted(tuple(r) for r in store.read(spark).collect())
+    assert store.optimize(spark) == sum(len(fl) for fl in m1["buckets"].values())
+    m2 = store.latest_manifest()
+    assert all(len(fl) == 1 for fl in m2["buckets"].values())
+    assert sorted(tuple(r) for r in store.read(spark).collect()) == before
+    n_file_rows = sum(
+        pq.ParquetFile(str(tmp_path / "table" / f)).metadata.num_rows
+        for fl in m2["buckets"].values()
+        for f in fl
+    )
+    assert n_file_rows == 40  # one row per key: superseded rows dropped
+    assert store.change_feed(spark, from_version=m1["version"]).count() == 0
 
 
 def test_delta_optimize_compacts(spark, tmp_path):
